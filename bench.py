@@ -223,8 +223,8 @@ def run_headline(spark, sf_dir: str) -> dict:
 
     def _polyfill_fleet_mixed(spark, sf_dir):
         # Round 4: same fleet but every 10th polygon reaches the north
-        # polar cap — exercises the closed-form annulus cap generator
-        # + nucleus-lon prune + Gauss-Legendre dart/skew centroids
+        # polar cap — exercises the closed-form cap ring-run generator
+        # + Gauss-Legendre dart/skew centroids
         # alongside the band spans, still one plan. Benched separately
         # so polyfill_fleet's own number stays comparable to r1-r3.
         from rhealpixdggs_spark.operators.tiling import polyfill_many

@@ -24,7 +24,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..kernel import cells as KC
 from ..kernel import neighbors as KN
-from ..kernel.constants import WGS84_003, DggsConfig
+from ..kernel.constants import CELLS0, WGS84_003, DggsConfig
 
 __all__ = [
     "rhp_encode",
@@ -148,7 +148,32 @@ def rhp_index_parent(cell_idx: Column, res: int, parent_res: int,
 
 def rhp_index_to_suid(cell_idx: Column, resolution: int,
                       cfg: DggsConfig = WGS84_003) -> Column:
-    """Packed index -> suid string (decode-on-demand boundary)."""
+    """Packed index -> suid string (decode-on-demand boundary).
+
+    For N_side=3 (the public grid) this is column math, no Python
+    stage: with rem = idx - ind(res), the face letter is
+    CELLS0[rem div 9^res] and the digits are rem mod 9^res written in
+    base 9, left-padded to `resolution` places (cell.py:89-119).
+    Nulls stay null. Other N_side fall back to the kernel codec in an
+    Arrow UDF."""
+    if cfg.N_side == 3:
+        base = cfg.num_cells(0, resolution - 1) if resolution > 0 else 0
+        span = 9**resolution
+        rem = cell_idx.cast("long") - F.lit(base)
+        digits = F.pmod(rem, F.lit(span))
+        # exact integer quotient: rem - digits is a multiple of span
+        face = ((rem - digits) / F.lit(span)).cast("int")
+        # out-of-range indices decode to null rather than raise
+        letter = F.when(
+            face.between(0, len(CELLS0) - 1),
+            F.element_at(F.array(*[F.lit(c) for c in CELLS0]), face + 1),
+        )
+        if resolution == 0:
+            return letter
+        return F.concat(
+            letter,
+            F.lpad(F.conv(digits.cast("string"), 10, 9), resolution, "0"),
+        )
 
     @pandas_udf(T.StringType())
     def _dec(idx: pd.Series) -> pd.Series:

@@ -686,11 +686,13 @@ def polygon_join_df(
     driver collect):
       1. tiling.resolve_fleet_vertices dateline-resolves the fleet in
          one Arrow pass (split parts re-keyed part*64+i);
-      2. tiling.fleet_candidate_idx generates each part's padded bbox
-         cover as packed int64 level-order indices — a SUPERSET of
-         every cell intersecting the bbox, so every point inside a
-         polygon is guaranteed a candidate row (the cap prune's pad
-         is 4x the nucleus-to-anywhere-in-cell longitude bound);
+      2. tiling.fleet_candidate_idx generates each part's candidate
+         cells as packed int64 level-order indices — padded band
+         spans of its bbox plus, in the polar caps, one run of cells
+         per square ring along its longitude wedge (padded by 4x the
+         cell-to-nucleus longitude bound) — a SUPERSET of the cells
+         holding its points, so every point inside a polygon is
+         guaranteed a candidate row;
       3. points encode ONCE to the same packed index
          (rhp_encode_index) and equi-join the candidate table on the
          8-byte key — at 100 TB the big side shuffles on int64 (or

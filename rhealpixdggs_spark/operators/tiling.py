@@ -57,21 +57,16 @@ def grid(spark: SparkSession, resolution: int, cfg: DggsConfig = WGS84_003,
     """All cells at a resolution as (cell_id string, cell_idx long).
 
     Distributed: spark.range over the level-order index interval
-    (cell.py:93-98), suid materialized by the index codec kernel
-    (cell.py:89-119) one Arrow batch at a time."""
+    (cell.py:93-98), suid materialized by the index codec
+    (rhp_index_to_suid: column math for N_side=3, cell.py:89-119)."""
+    from ..functions.udfs import rhp_index_to_suid
+
     lo = cfg.num_cells(0, resolution - 1) if resolution > 0 else 0
     hi = lo + 6 * cfg.N_side ** (2 * resolution)
-
-    @pandas_udf(T.StringType())
-    def idx_to_suid(idx: pd.Series) -> pd.Series:
-        face, digits = KC.suid_from_level_order_index(
-            cfg, idx.to_numpy(dtype=np.int64), resolution
-        )
-        return pd.Series(KC.suid_strings(face, digits), index=idx.index)
-
     rng = spark.range(lo, hi, numPartitions=partitions)
     return rng.select(
-        idx_to_suid(F.col("id")).alias("cell_id"), F.col("id").alias("cell_idx")
+        rhp_index_to_suid(F.col("id"), resolution, cfg).alias("cell_id"),
+        F.col("id").alias("cell_idx"),
     )
 
 
@@ -259,12 +254,14 @@ def region_cover_ell_df(
     every row whose nucleus lies in the equatorial band expands to a
     closed-form planar COLUMN range (east neighbor == next column,
     x == R*lambda there), materialized by the level-order index codec
-    in one Arrow pass — no neighbor walking, no driver-side cells.
+    as column math — no neighbor walking, no driver-side cells.
     Polar-cap rows (the parallel's image is a square ring around the
     cap, dggs.py:1060-1094) fall back to the per-row walk kernel
     cells_from_parallel inside a pandas UDF, parallel across rows.
     """
     import math
+
+    from ..functions.udfs import rhp_index_to_suid
 
     PI = np.pi if cfg.radians else 180.0
     mat_fallback = (
@@ -382,30 +379,15 @@ def region_cover_ell_df(
         gc = (F.col("col_i") + F.lit(c0)) % F.lit(ring_len)
         rib = F.floor((F.lit(band) - F.col("y")) / F.lit(w)).cast("long")
         face = F.lit(1) + F.floor(gc / F.lit(n3)).cast("long")
-        cif = gc % F.lit(n3)
-        # level-order index = base + face*9^res + 3*spread3to9(row) +
-        # spread3to9(col) (cell.py:260-267 digit interleave).
-        base = cfg.num_cells(0, res - 1)
-        idx = F.lit(base) + face * F.lit((cfg.N_side**2) ** res)
-        spread_r, spread_c = F.lit(0).cast("long"), F.lit(0).cast("long")
-        for i in range(res):
-            p3, p9 = cfg.N_side**i, (cfg.N_side**2) ** i
-            spread_r = spread_r + (F.floor(rib / F.lit(p3)) % 3) * F.lit(p9)
-            spread_c = spread_c + (F.floor(cif / F.lit(p3)) % 3) * F.lit(p9)
-        idx = idx + F.lit(3) * spread_r + spread_c
-
-        @pandas_udf(T.StringType())
-        def idx_to_suid(ix: pd.Series) -> pd.Series:
-            face, digits = KC.suid_from_level_order_index(
-                cfg, ix.to_numpy(dtype=np.int64), res
-            )
-            return pd.Series(KC.suid_strings(face, digits), index=ix.index)
-
         parts.append(
             g.select(
-                F.col("row_i").cast("long"),
-                F.col("col_i").cast("long"),
-                idx_to_suid(idx).alias("cell_id"),
+                F.col("row_i").cast("long"), F.col("col_i").cast("long"),
+                face.alias("_f"), rib.alias("_i"), (gc % F.lit(n3)).alias("_j"),
+            ).select(
+                "row_i", "col_i",
+                rhp_index_to_suid(
+                    _interleave_idx(cfg, res, "_f", "_i", "_j"), res, cfg
+                ).alias("cell_id"),
             )
         )
     if walk_rows:
@@ -962,132 +944,163 @@ def zone_tiles_many_df(
     )
 
 
-def _interleave_idx(cfg: DggsConfig, res: int, face, i_col, j_col):
+def _dbl(x: float) -> str:
+    """A Python float as an exact SQL DOUBLE literal (a bare decimal
+    literal would parse as DECIMAL)."""
+    return f"{float(x)!r}D"
+
+
+def _interleave_idx(cfg: DggsConfig, res: int, face: str, i: str, j: str):
     """Level-order index of the res-`res` cell at (row i, col j) of
-    planar face `face` — the digit-interleave closed form shared by
-    the band and cap candidate generators (same construction as
-    region_cover_ell_df's path; cell.py:93-119 index semantics)."""
-    base = cfg.num_cells(0, res - 1)
-    idx = F.lit(base) + face * F.lit((cfg.N_side**2) ** res)
-    spread_i, spread_j = F.lit(0).cast("long"), F.lit(0).cast("long")
-    for k in range(res):
-        p3, p9 = cfg.N_side**k, (cfg.N_side**2) ** k
-        spread_i = spread_i + (F.floor(i_col / F.lit(p3)) % 3) * F.lit(p9)
-        spread_j = spread_j + (F.floor(j_col / F.lit(p3)) % 3) * F.lit(p9)
-    return idx + F.lit(3) * spread_i + spread_j
+    planar face `face` (SQL expressions over integer columns) — the
+    digit-interleave closed form shared by the band and cap candidate
+    generators and region_cover_ell_df (cell.py:93-119 index
+    semantics): idx = ind(res) + face*9^res + 3*spread(i) + spread(j),
+    where spread reads i's base-3 digits as base-9 digits, i.e.
+    conv(conv(i, 10, 3), 9, 10). N_side=3 only."""
+    def spread(c: str) -> str:
+        return f"CAST(conv(conv(CAST({c} AS STRING), 10, 3), 9, 10) AS BIGINT)"
+
+    base = cfg.num_cells(0, res - 1) if res > 0 else 0
+    return F.expr(
+        f"{base}L + ({face}) * {9**res}L + 3 * {spread(i)} + {spread(j)}"
+    )
 
 
-def _cap_candidate_cells(
-    capdf: DataFrame,
-    bboxes: DataFrame,
-    cfg: DggsConfig,
-    res: int,
+def _part_candidate_idx(
+    parts: DataFrame, cfg: DggsConfig, res: int
 ) -> DataFrame:
-    """Polar-cap candidate cells (zone, face, fi, fj) from square
-    annuli: `capdf` rows are (zone, face, a, b) — the annulus
-    [a, b] in cell units around the polar face center (see
-    polyfill_many's closed form) — and `bboxes` carries the
-    per-zone (lam_mid, lam_half) longitude bbox driving the
-    nucleus-longitude prune that keeps the Gauss-Legendre centroid
-    pass off the ~360/wedge-width over-generation of a lon-narrow
-    cap polygon. Shared by the dict- and DataFrame-native polyfill
-    fleets; all span math is column expressions."""
-    w = cfg.cell_width(res)
+    """Candidate res-`res` cells (zone, _idx) of polygon parts, as
+    packed int64 level-order indices. `parts` has one row per part:
+    (zone, lon_lo, lon_hi, y_lo, y_hi) — the exterior's longitude
+    range in cfg units and the HEALPix planar y of its latitude
+    extremes. The output is a SUPERSET of the cells that hold a point
+    of some part (so it prefilters both centroid membership and point
+    containment); it may contain duplicates across parts.
+
+    Each part emits LINES — equatorial-band rows and polar-cap rings —
+    and each line one contiguous RUN of cell positions; lines and runs
+    are sequence-exploded in one pipeline of column math (no union,
+    no join, no Python), so the cost follows the candidate count.
+      * band: rows [row0, row1] of the band, each with the global
+        column run [gc0, gc1] (+/-1 cell padded bbox cover);
+      * caps: in the assembled polar face a parallel's image is the
+        square ring of cells at Chebyshev radius k around the face
+        centre (dggs.py:1060-1094), and along that ring a cell
+        nucleus's longitude is linear in its perimeter position
+        p in [0, 8k): lon = start + p * 2*HALF / 8k, counted from the
+        ring corner at start = lon_0 - HALF + square * HALF/2 (the
+        north ring runs anticlockwise from its lower-left corner, the
+        south ring clockwise from its upper-left one). The part's
+        planar y range gives the rings [k0, k1] (its cap portion's
+        distance from the pole, +/-1 cell); its longitude range padded
+        by HALF / max(k - 1/2, 1/2) gives the run of p, taken mod 8k,
+        so a wedge across the +/-HALF seam is still one run and one
+        wider than the ring (the pole-holding part) is the full ring.
+
+    Superset: a ring-k cell spans Chebyshev radii [k - 1/2, k + 1/2],
+    and a ring side of 2r cells at radius r maps to a quarter turn,
+    so any point of the cell is within HALF/4 / (k - 1/2) longitude of
+    the cell's nucleus; the pad is 4x that bound. HALF is the
+    cfg-unit half-turn (pi for radians configs), the unit of the
+    polygon longitudes.
+
+    The expressions are SQL strings: built as Column objects they cost
+    hundreds of driver->JVM calls per plan (~1 s of driver time per
+    polygon_join_df call at res 7), as strings a handful."""
+    R = cfg.R_A
+    w = _dbl(cfg.cell_width(res))
     n3 = cfg.N_side**res
-    half = F.lit(n3 / 2.0)
-    i_lo = F.greatest(F.lit(0), F.floor(half - F.col("b")).cast("long") - 1)
-    i_hi = F.least(
-        F.lit(n3 - 1), F.ceil(half + F.col("b")).cast("long")
-    )
-    gi = capdf.select(
-        "zone", "face", "a", "b",
-        F.explode(F.sequence(i_lo, i_hi)).alias("fi"),
-    )
-    # Box infinity-distance interval of face row fi from the face
-    # center, in cell units: rows whose NEAREST edge is outside B
-    # drop; rows whose FARTHEST edge reaches past A keep one full
-    # span, interior rows keep the two annulus flanks.
-    dlo_i = F.greatest(
-        half - (F.col("fi") + 1), F.col("fi") - half, F.lit(0.0)
-    )
-    dhi_i = F.greatest(
-        F.abs(F.col("fi") - half), F.abs(F.col("fi") + 1 - half)
-    )
-    jl = F.greatest(F.lit(0), F.floor(half - F.col("b")).cast("long") - 1)
-    jr = F.least(F.lit(n3 - 1), F.ceil(half + F.col("b")).cast("long"))
-    j_in_l = F.floor(half - F.col("a")).cast("long")
-    j_in_r = F.ceil(half + F.col("a")).cast("long") - 1
-    spans = (
-        gi.where(dlo_i <= F.col("b"))
-        .select(
-            "zone", "face", "fi",
-            F.explode(
-                F.when(
-                    dhi_i >= F.col("a"),
-                    F.array(F.struct(jl.alias("j0"), jr.alias("j1"))),
-                ).otherwise(
-                    F.array(
-                        F.struct(
-                            jl.alias("j0"),
-                            F.least(j_in_l, jr).alias("j1"),
-                        ),
-                        F.struct(
-                            F.greatest(j_in_r, jl).alias("j0"),
-                            jr.alias("j1"),
-                        ),
-                    )
-                )
-            ).alias("s"),
-        )
-        .select("zone", "face", "fi", F.col("s.j0"), F.col("s.j1"))
-        .where(F.col("j0") <= F.col("j1"))
-    )
-    gj = spans.select(
-        "zone", "face", "fi", F.explode(F.sequence("j0", "j1")).alias("fj")
-    )
-    # Nucleus-longitude prune BEFORE the expensive Gauss-Legendre
-    # centroid pass: a full annulus over-generates ~360/wedge-width
-    # for a lon-narrow cap polygon, and each dart/skew centroid
-    # costs a 900-point inverse-projection integral. The nucleus
-    # is a single inverse projection per cell (straight from the
-    # planar center, no suid), and |centroid lon - nucleus lon| is
-    # bounded by the cell's lon span <= 45deg/dlo (a ring side of
-    # 2*dlo cells maps to 90deg) — the pad HALF/max(dlo, 0.5) is 4x
-    # that, so every centroid-inside cell survives the prune.
-    # HALF is the cfg-unit half-turn (pi for radians configs): the
-    # circular wrap and pad below MUST be in the same units as
-    # lam_mid/lam_half (raw polygon lons) and rhealpix_inverse.
+    c0 = (n3 - 1) // 2
+    band, y_pole = R * np.pi / 4, R * np.pi / 2
     HALF = np.pi if cfg.radians else 180.0
-    dlo_j = F.greatest(
-        half - (F.col("fj") + 1), F.col("fj") - half, F.lit(0.0)
+
+    def lam(c: str) -> str:
+        return c if cfg.radians else f"radians({c})"
+
+    def col_of(lon: str) -> str:
+        return f"floor(({_dbl(R)} * {lam(lon)} + {_dbl(R * np.pi)}) / {w})"
+
+    def line(face: int, l0: str, l1: str) -> str:
+        return (
+            f"named_struct('face', {face}L, 'l0', CAST({l0} AS BIGINT), "
+            f"'l1', CAST({l1} AS BIGINT))"
+        )
+
+    def cap_line(face: int, reach: str, u_near: str, u_far: str) -> str:
+        # rings whose radius span [k - 1/2, k + 1/2] meets the cap
+        # portion's distance range [u_near/w - 1, u_far/w + 1]; an
+        # unreached cap gets the empty line [0, -1]
+        return line(
+            face,
+            f"greatest(0, ceil(({u_near}) / {w} - 1.5D))",
+            f"IF({reach}, least({c0}, floor(({u_far}) / {w} + 1.5D)), -1)",
+        )
+
+    band_line = line(
+        -1,
+        f"greatest(0, floor(({_dbl(band)} - y_hi) / {w}) - 1)",
+        f"least({n3 - 1}, floor(({_dbl(band)} - y_lo) / {w}) + 1)",
     )
-    dlo_cell = F.greatest(dlo_i, dlo_j)
-    pad = F.lit(HALF) / F.greatest(dlo_cell, F.lit(0.5))
-
-    @pandas_udf(T.DoubleType())
-    def _cap_nuc_lon(face_s: pd.Series, fi_s: pd.Series,
-                     fj_s: pd.Series) -> pd.Series:
-        from ..kernel.rhealpix import rhealpix_inverse
-
-        f = face_s.to_numpy(dtype=np.int64)
-        i_a = fi_s.to_numpy(dtype=np.int64)
-        j_a = fj_s.to_numpy(dtype=np.int64)
-        ulx = np.array([cfg.ul_vertex_face(k)[0] for k in range(6)])
-        uly = np.array([cfg.ul_vertex_face(k)[1] for k in range(6)])
-        x = ulx[f] + (j_a + 0.5) * w
-        y = uly[f] - (i_a + 0.5) * w
-        lo, _ = rhealpix_inverse(cfg, x, y)
-        return pd.Series(lo, index=face_s.index)
-
-    circ = F.abs(
-        ((_cap_nuc_lon.asNondeterministic()(
-            F.col("face"), F.col("fi"), F.col("fj")
-        ) - F.col("lam_mid") + F.lit(3 * HALF)) % F.lit(2 * HALF))
-        - F.lit(HALF)
+    north = cap_line(
+        0, f"y_hi >= {_dbl(band)}",
+        f"{_dbl(y_pole)} - least(y_hi, {_dbl(y_pole)})",
+        f"{_dbl(y_pole)} - greatest(y_lo, {_dbl(band)})",
     )
-    return gj.join(bboxes, "zone").where(
-        circ <= F.col("lam_half") + pad
-    ).select("zone", "face", "fi", "fj")
+    south = cap_line(
+        5, f"y_lo <= {_dbl(-band)}",
+        f"greatest(y_lo, {_dbl(-y_pole)}) + {_dbl(y_pole)}",
+        f"least(y_hi, {_dbl(-band)}) + {_dbl(y_pole)}",
+    )
+    lines = parts.selectExpr(
+        "zone", "lon_lo", "lon_hi",
+        f"greatest(0, {col_of('lon_lo')} - 1) AS gc0",
+        f"least({4 * n3 - 1}, {col_of('lon_hi')} + 1) AS gc1",
+        f"explode(array({band_line}, {north}, {south})) AS s",
+    ).where("s.l0 <= s.l1").selectExpr(
+        "zone", "lon_lo", "lon_hi", "gc0", "gc1", "s.face AS face",
+        "explode(sequence(s.l0, s.l1)) AS line",
+    )
+
+    # ring k = line: 8k positions, a step of 2*HALF/8k longitude each
+    nper = "greatest(8 * line, 1)"
+    step = f"({_dbl(2 * HALF)} / {nper})"
+    pad = f"({_dbl(HALF)} / greatest(line - 0.5D, 0.5D))"
+    start = (
+        f"IF(face = 0, {_dbl(cfg.lon_0 - HALF + cfg.north_square * HALF / 2)},"
+        f" {_dbl(cfg.lon_0 - HALF + cfg.south_square * HALF / 2)})"
+    )
+    p0 = f"ceil((lon_lo - {pad} - {start}) / {step})"
+    p1 = f"floor((lon_hi + {pad} - {start}) / {step})"
+    full = f"{p1} - {p0} + 1 >= {nper}"
+    runs = lines.selectExpr(
+        "zone", "face", "line AS k", f"{nper} AS nper",
+        f"explode(sequence("
+        f"CASE WHEN face < 0 THEN gc0 WHEN {full} THEN 0 ELSE {p0} END, "
+        f"CASE WHEN face < 0 THEN gc1 WHEN {full} THEN {nper} - 1 "
+        f"ELSE {p1} END)) AS v",
+    )
+
+    # ring position p = v mod 8k -> side (0-3) and offset r along it ->
+    # face cell (c0 + dx, c0 -/+ dy); the north ring goes anticlockwise
+    # in the plane, the south one clockwise, so only dy's sign differs.
+    # Band lines map v to (face, column) of the band row k.
+    sides = runs.selectExpr(
+        "zone", "face", "k", "v",
+        "pmod(v, nper) div greatest(2 * k, 1) AS side",
+        "pmod(v, nper) % greatest(2 * k, 1) AS r",
+    )
+    dx = "CASE side WHEN 0 THEN r - k WHEN 1 THEN k WHEN 2 THEN k - r ELSE -k END"
+    dy = "CASE side WHEN 0 THEN -k WHEN 1 THEN r - k WHEN 2 THEN k ELSE k - r END"
+    cells = sides.selectExpr(
+        "zone",
+        f"IF(face < 0, 1 + v div {n3}, face) AS f",
+        f"IF(face < 0, k, {c0} + IF(face = 0, -1, 1) * ({dy})) AS i",
+        f"IF(face < 0, v % {n3}, {c0} + {dx}) AS j",
+    )
+    return cells.select(
+        "zone", _interleave_idx(cfg, res, "f", "i", "j").alias("_idx")
+    )
 
 
 def polyfill_many(
@@ -1098,44 +1111,33 @@ def polyfill_many(
     partitions: int | None = None,
     split_dateline: bool | None = None,
 ) -> DataFrame:
-    """Lock-step polyfill for MANY polygons in ONE plan: a single
-    band-candidate generator (per-polygon row/column spans,
-    sequence-exploded Spark-side) plus ONE cap-row walk generator for
-    polygons reaching the polar caps, a shared packed-int64 dedupe,
-    one index->suid pass, one centroid decode pass, and one per-zone
+    """Lock-step polyfill for MANY polygons in ONE plan: one candidate
+    generator for every polygon part (band row/column spans and
+    polar-cap ring runs, sequence-exploded Spark-side by
+    _part_candidate_idx), a shared packed-int64 dedupe, one
+    index->suid pass, one centroid decode pass, and one per-zone
     even-odd filter — no per-polygon union, so a mixed 10k-polygon
     fleet rasterizes with one plan. Correctness needs no lattice
-    parity: candidates are a PADDED SUPERSET of each bbox cover and
-    the centroid-in-polygon filter (rhp_wrappers.py:510-599 semantics,
-    same as polyfill_df) decides membership.
+    parity: candidates are a PADDED SUPERSET of the cells holding a
+    point of each polygon and the centroid-in-polygon filter
+    (rhp_wrappers.py:510-599 semantics, same as polyfill_df) decides
+    membership.
 
     Cap candidates (|planar y| >= R*pi/4) come from a CLOSED FORM: in
     the assembled polar face a parallel's image is the square ring of
     infinity-norm radius u = R*pi/2 - |y| around the face center
-    (dggs.py:1060-1094's geometry), so the polygon's cap portion maps
-    to a square ANNULUS of cells [A, B] in cell units. A cell whose
-    centroid lies in the polygon has its centroid's u inside
-    [u(lat_max), u(cap edge)], and the centroid sits inside the cell's
-    planar square, so the cell's box-distance interval intersects the
-    annulus — candidates are a proven superset, generated as <= 2
-    column spans per face row (sequence-exploded, pure column math,
-    no per-cell Python; the over-generation for a lon-narrow cap
-    polygon is bounded by the annulus area and the centroid filter
-    drops it — zone_tiles does perimeter-proportional work if that
-    matters).
+    (dggs.py:1060-1094's geometry), and along each ring longitude is
+    linear in perimeter position, so a polygon's cap portion is one
+    contiguous run of cells per ring, padded by 4x the
+    cell-to-nucleus longitude bound — the work is proportional to the
+    candidates, not to the rings' perimeters.
 
     Dateline: crossing rings are detected (same unwrap-seam scan as
     split_antimeridian) and auto-split into same-zone parts when
     split_dateline is None (the default); True forces the split path,
     False raises if any ring crosses. Output: (tile_id, res, zone)."""
-    from ..functions.udfs import rhp_centroid
+    from ..functions.udfs import rhp_centroid, rhp_index_to_suid
     from ..kernel.regions import healpix_forward_cfg
-
-    R = cfg.R_A
-    w = cfg.cell_width(res)
-    n3 = cfg.N_side**res
-    band = R * np.pi / 4
-    y_pole = R * np.pi / 2
 
     polygons = {
         zone: _resolve_split_dateline(
@@ -1145,9 +1147,7 @@ def polyfill_many(
     }
 
     rows = []
-    cap_rows = []
     lookup = {}
-    lon_bbox: dict[str, tuple[float, float]] = {}
     for zone, polys in polygons.items():
         lookup[zone] = [
             (
@@ -1158,98 +1158,26 @@ def polyfill_many(
         ]
         for ext, _holes in polys:
             arr = np.asarray(ext, dtype=np.float64)
-            _, y_lo = healpix_forward_cfg(
-                cfg, np.array([0.0]), np.array([arr[:, 1].min()])
+            _, y = healpix_forward_cfg(
+                cfg, np.zeros(2), np.array([arr[:, 1].min(), arr[:, 1].max()])
             )
-            _, y_hi = healpix_forward_cfg(
-                cfg, np.array([0.0]), np.array([arr[:, 1].max()])
-            )
-            y_lo, y_hi = float(y_lo[0]), float(y_hi[0])
-            lam0d = float(arr[:, 0].min())
-            lam1d = float(arr[:, 0].max())
-            if zone in lon_bbox:
-                lon_bbox[zone] = (
-                    min(lon_bbox[zone][0], lam0d),
-                    max(lon_bbox[zone][1], lam1d),
-                )
-            else:
-                lon_bbox[zone] = (lam0d, lam1d)
-            row0 = max(0, int((band - y_hi) // w) - 1)
-            row1 = min(n3 - 1, int((band - y_lo) // w) + 1)
-            lam = np.radians(arr[:, 0]) if not cfg.radians else arr[:, 0]
-            gc0 = max(0, int((R * lam.min() + R * np.pi) // w) - 1)
-            gc1 = min(4 * n3 - 1, int((R * lam.max() + R * np.pi) // w) + 1)
-            if row1 >= row0:  # pure-cap polygons have no band rows
-                # (and sequence(row0, row1) would run DESCENDING)
-                rows.append((zone, row0, row1, gc0, gc1))
-            # Cap portions as square annuli [A, B] in cell units
-            # (+/- 1 cell insurance on top of the proven superset).
-            if y_hi >= band:  # north cap, face N = 0
-                u_in = y_pole - min(y_hi, y_pole)
-                u_out = y_pole - max(y_lo, band)
-                cap_rows.append(
-                    (zone, 0, max(0.0, u_in / w - 1),
-                     min(n3 / 2.0, u_out / w + 1))
-                )
-            if y_lo <= -band:  # south cap, face S = 5
-                u_in = min(y_hi, -band) + y_pole
-                u_out = max(y_lo, -y_pole) + y_pole
-                cap_rows.append(
-                    (zone, 5, max(0.0, min(u_in, u_out) / w - 1),
-                     min(n3 / 2.0, max(u_in, u_out) / w + 1))
-                )
+            rows.append((
+                zone, float(arr[:, 0].min()), float(arr[:, 0].max()),
+                float(y[0]), float(y[1]),
+            ))
 
-    spans = spark.createDataFrame(
-        rows, "zone string, row0 long, row1 long, gc0 long, gc1 long"
+    parts = spark.createDataFrame(
+        rows,
+        "zone string, lon_lo double, lon_hi double, y_lo double, y_hi double",
     )
     if partitions:
-        spans = spans.repartition(partitions)
-    g = spans.select(
-        "zone",
-        F.explode(F.sequence("row0", "row1")).alias("rib"),
-        "gc0", "gc1",
-    ).select(
-        "zone", "rib", F.explode(F.sequence("gc0", "gc1")).alias("gc")
-    )
-    # level-order index from (row-in-band, global column), same digit
-    # interleave as region_cover_ell_df's closed-form path
-    face = F.lit(1) + F.floor(F.col("gc") / F.lit(n3)).cast("long")
-    cif = F.col("gc") % F.lit(n3)
-    idx = _interleave_idx(cfg, res, face, F.col("rib"), cif)
-
-    @pandas_udf(T.StringType())
-    def idx_to_suid(ix: pd.Series) -> pd.Series:
-        face_a, digits = KC.suid_from_level_order_index(
-            cfg, ix.to_numpy(dtype=np.int64), res
-        )
-        return pd.Series(KC.suid_strings(face_a, digits), index=ix.index)
-
+        parts = parts.repartition(partitions)
     # Dedupe multi-part zones on the packed int64 BEFORE decoding:
     # the distinct's shuffle is 8-byte keys, and it spreads the
     # decode + centroid Arrow passes across the full shuffle
     # parallelism instead of the few input partitions of the tiny
-    # spans table.
-    keyed = g.select("zone", idx.alias("_idx"))
-    if cap_rows:
-        capdf = spark.createDataFrame(
-            cap_rows, "zone string, face long, a double, b double"
-        )
-        if partitions:
-            capdf = capdf.repartition(partitions)
-        bbox_rows = [
-            (z, (lam0 + lam1) / 2.0, (lam1 - lam0) / 2.0)
-            for z, (lam0, lam1) in lon_bbox.items()
-        ]
-        bboxes = F.broadcast(
-            spark.createDataFrame(
-                bbox_rows, "zone string, lam_mid double, lam_half double"
-            )
-        )
-        gj = _cap_candidate_cells(capdf, bboxes, cfg, res)
-        idxc = _interleave_idx(
-            cfg, res, F.col("face"), F.col("fi"), F.col("fj")
-        )
-        keyed = keyed.unionByName(gj.select("zone", idxc.alias("_idx")))
+    # parts table.
+    keyed = _part_candidate_idx(parts, cfg, res)
     # Explicit round-robin fan-out before the Gauss-Legendre centroid
     # pass: the distinct() output is only a few MB, so AQE's
     # BYTE-based coalescing would fold it into one task — but the
@@ -1270,7 +1198,7 @@ def polyfill_many(
         keyed.select("_idx")
         .distinct()
         .repartition(fanout)
-        .select("_idx", idx_to_suid(F.col("_idx")).alias("tile_id"))
+        .select("_idx", rhp_index_to_suid(F.col("_idx"), res, cfg).alias("tile_id"))
         .withColumn("_c", rhp_centroid(F.col("tile_id"), cfg, plane=False))
     )
     cand = keyed.distinct().join(cells, "_idx").select("zone", "tile_id", "_c")
@@ -1404,23 +1332,17 @@ def fleet_candidate_idx(
 ) -> DataFrame:
     """Candidate res-`res` cells per zone for a dateline-RESOLVED
     vertex fleet, as packed int64 level-order indices (zone, _idx) —
-    pure column math end to end: per-part exterior bbox stats are a
-    JVM aggregation, the HEALPix y of the lat extremes is one tiny
-    Arrow pass over the per-part rows, band row/column spans and
-    closed-form polar-cap annuli are sequence-exploded exactly like
-    polyfill_many's driver loop (shared _interleave_idx /
-    _cap_candidate_cells helpers, +/-1-cell padding). The output is a
-    SUPERSET of every cell intersecting each part's bbox, so it
-    prefilters both centroid membership (polyfill_many_df) and
-    point containment (polygon_join_df). May contain duplicates —
-    callers dedupe on the 8-byte key."""
+    per-part exterior bbox stats are a JVM aggregation, the HEALPix y
+    of the lat extremes is one tiny Arrow pass over the per-part
+    rows, and band spans plus polar-cap ring runs are then column
+    math from those same rows (_part_candidate_idx, shared with
+    polyfill_many; each part's own longitude wedge, padded by 4x the
+    cell-to-nucleus longitude bound, drives its cap runs). The output
+    is a SUPERSET of the cells holding a point of each part, so it
+    prefilters both centroid membership (polyfill_many_df) and point
+    containment (polygon_join_df). May contain duplicates — callers
+    dedupe on the 8-byte key."""
     from ..kernel.regions import healpix_forward_cfg
-
-    R = cfg.R_A
-    w = cfg.cell_width(res)
-    n3 = cfg.N_side**res
-    band = R * np.pi / 4
-    y_pole = R * np.pi / 2
 
     @pandas_udf(T.DoubleType())
     def _fwd_y(lat_s: pd.Series) -> pd.Series:
@@ -1437,107 +1359,12 @@ def fleet_candidate_idx(
             F.min("lat").alias("lat_lo"), F.max("lat").alias("lat_hi"),
         )
         .select(
-            "zone", "part", "lon_lo", "lon_hi",
+            "zone", "lon_lo", "lon_hi",
             _fwd_y(F.col("lat_lo")).alias("y_lo"),
             _fwd_y(F.col("lat_hi")).alias("y_hi"),
         )
     )
-
-    # Band row/column spans: the same +/-1-padded closed forms as
-    # polyfill_many's driver loop, as column expressions.
-    lam_lo = F.col("lon_lo") if cfg.radians else F.radians("lon_lo")
-    lam_hi = F.col("lon_hi") if cfg.radians else F.radians("lon_hi")
-    row0 = F.greatest(
-        F.lit(0),
-        F.floor((F.lit(band) - F.col("y_hi")) / F.lit(w)).cast("long") - 1,
-    )
-    row1 = F.least(
-        F.lit(n3 - 1),
-        F.floor((F.lit(band) - F.col("y_lo")) / F.lit(w)).cast("long") + 1,
-    )
-    gc0 = F.greatest(
-        F.lit(0),
-        F.floor((F.lit(R) * lam_lo + F.lit(R * np.pi)) / F.lit(w))
-        .cast("long") - 1,
-    )
-    gc1 = F.least(
-        F.lit(4 * n3 - 1),
-        F.floor((F.lit(R) * lam_hi + F.lit(R * np.pi)) / F.lit(w))
-        .cast("long") + 1,
-    )
-    spans = heads.select(
-        "zone", row0.alias("row0"), row1.alias("row1"),
-        gc0.alias("gc0"), gc1.alias("gc1"),
-        "y_lo", "y_hi",
-    )
-    g = (
-        spans.where(F.col("row0") <= F.col("row1"))
-        .select(
-            "zone",
-            F.explode(F.sequence("row0", "row1")).alias("rib"),
-            "gc0", "gc1",
-        )
-        .select(
-            "zone", "rib", F.explode(F.sequence("gc0", "gc1")).alias("gc")
-        )
-    )
-    face = F.lit(1) + F.floor(F.col("gc") / F.lit(n3)).cast("long")
-    cif = F.col("gc") % F.lit(n3)
-    keyed = g.select(
-        "zone",
-        _interleave_idx(cfg, res, face, F.col("rib"), cif).alias("_idx"),
-    )
-
-    # Cap annuli [a, b] in cell units (polyfill_many's closed form)
-    # as a conditional struct-array explode: 0-2 cap rows per part.
-    ycol_lo, ycol_hi = F.col("y_lo"), F.col("y_hi")
-    north = F.when(
-        ycol_hi >= F.lit(band),
-        F.array(F.struct(
-            F.lit(0).cast("long").alias("face"),
-            F.greatest(
-                F.lit(0.0),
-                (F.lit(y_pole) - F.least(ycol_hi, F.lit(y_pole)))
-                / F.lit(w) - 1,
-            ).alias("a"),
-            F.least(
-                F.lit(n3 / 2.0),
-                (F.lit(y_pole) - F.greatest(ycol_lo, F.lit(band)))
-                / F.lit(w) + 1,
-            ).alias("b"),
-        )),
-    ).otherwise(F.array().cast("array<struct<face:long,a:double,b:double>>"))
-    s_in = F.least(ycol_hi, F.lit(-band)) + F.lit(y_pole)
-    s_out = F.greatest(ycol_lo, F.lit(-y_pole)) + F.lit(y_pole)
-    south = F.when(
-        ycol_lo <= F.lit(-band),
-        F.array(F.struct(
-            F.lit(5).cast("long").alias("face"),
-            F.greatest(
-                F.lit(0.0), F.least(s_in, s_out) / F.lit(w) - 1
-            ).alias("a"),
-            F.least(
-                F.lit(n3 / 2.0), F.greatest(s_in, s_out) / F.lit(w) + 1
-            ).alias("b"),
-        )),
-    ).otherwise(F.array().cast("array<struct<face:long,a:double,b:double>>"))
-    capdf = (
-        spans.select("zone", F.explode(F.concat(north, south)).alias("c"))
-        .select("zone", "c.face", "c.a", "c.b")
-    )
-    bboxes = heads.groupBy("zone").agg(
-        ((F.min("lon_lo") + F.max("lon_hi")) / 2.0).alias("lam_mid"),
-        ((F.max("lon_hi") - F.min("lon_lo")) / 2.0).alias("lam_half"),
-    )
-    gj = _cap_candidate_cells(capdf, bboxes, cfg, res)
-    return keyed.unionByName(
-        gj.select(
-            "zone",
-            _interleave_idx(
-                cfg, res, F.col("face"), F.col("fi"), F.col("fj")
-            ).alias("_idx"),
-        )
-    )
+    return _part_candidate_idx(heads, cfg, res)
 
 
 def fleet_edges(resolved: DataFrame) -> DataFrame:
@@ -1612,7 +1439,7 @@ def polyfill_many_df(
 ) -> DataFrame:
     """DataFrame-NATIVE polygon-fleet polyfill: same semantics as
     polyfill_many (centroid-in-polygon membership, rhp_wrappers.py:
-    510-599; band spans + closed-form cap annuli + nucleus-lon prune)
+    510-599; band spans + closed-form polar-cap ring runs)
     but the polygons arrive as a VERTEX TABLE
     (zone, part, ring, vtx, lon, lat) — ring 0 the exterior, rings
     >= 1 holes — so NOTHING about the fleet ever lives on the driver:
@@ -1630,10 +1457,9 @@ def polyfill_many_df(
          pandas overhead: a 100k-polygon fleet resolves in one pass.
       2. per-part exterior bbox stats are a plain JVM aggregation;
          the HEALPix y of the lat extremes is one tiny Arrow pass
-         over the per-part rows; band row/column spans and cap annuli
-         are then pure column math, sequence-exploded exactly like
-         polyfill_many (shared _interleave_idx / _cap_candidate_cells
-         helpers).
+         over the per-part rows; band row/column spans and cap ring
+         runs are then pure column math, sequence-exploded exactly
+         like polyfill_many (shared _part_candidate_idx helper).
       3. membership replaces the driver-closure even-odd UDF with a
          RELATIONAL even-odd: candidates equi-join the edge table on
          zone, each edge contributes the kernel's crossing predicate
@@ -1646,7 +1472,7 @@ def polyfill_many_df(
     split_dateline=None auto-splits crossing rings; True forces the
     split; False raises (inside the distributed resolve stage) if any
     ring crosses. Output: (tile_id, res, zone), distinct."""
-    from ..functions.udfs import rhp_centroid
+    from ..functions.udfs import rhp_centroid, rhp_index_to_suid
 
     if partitions:
         polygons = polygons.repartition(partitions, "zone", "part")
@@ -1662,13 +1488,6 @@ def polyfill_many_df(
         polygons, cfg, split_dateline, "polyfill_many_df"
     ).persist(StorageLevel.MEMORY_AND_DISK)
     keyed = fleet_candidate_idx(resolved, cfg, res)
-
-    @pandas_udf(T.StringType())
-    def idx_to_suid(ix: pd.Series) -> pd.Series:
-        face_a, digits = KC.suid_from_level_order_index(
-            cfg, ix.to_numpy(dtype=np.int64), res
-        )
-        return pd.Series(KC.suid_strings(face_a, digits), index=ix.index)
 
     # Decode each DISTINCT cell once, not once per (zone, cell) pair:
     # overlapping fleets share cells, so the candidate pair table is
@@ -1691,7 +1510,7 @@ def polyfill_many_df(
     cells = (
         pairs.select("_idx").distinct()
         .repartition(fanout)
-        .select("_idx", idx_to_suid(F.col("_idx")).alias("tile_id"))
+        .select("_idx", rhp_index_to_suid(F.col("_idx"), res, cfg).alias("tile_id"))
         .withColumn("_c", rhp_centroid(F.col("tile_id"), cfg, plane=False))
         .select(
             "_idx", "tile_id",

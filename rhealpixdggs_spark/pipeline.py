@@ -27,15 +27,15 @@ def encode_pages(
     extraction projection and dropped before the shuffle; `text`
     passes through byte-identical."""
     tagged = extract_geotags(pages)
-    # Null-filter BEFORE the UDF: filtering on the UDF output would
-    # make Catalyst instantiate a second ArrowEvalPython for the
-    # filter and re-run the encode per consumer. Filter on lon only —
-    # lat and lon are extracted from the same meta tag, so they are
-    # null together — keeping the inlined extraction to one evaluation
-    # in the filter; a lat-only null would just encode to null.
-    return tagged.where(F.col("lon").isNotNull()).withColumn(
+    # Null-filter AFTER the UDF: a filter on lon below it would inline
+    # the decode + regexp_extract(html) extraction into a Filter and
+    # evaluate it again in the Project feeding the UDF. The encode is
+    # marked nondeterministic, so Catalyst keeps the filter above its
+    # single ArrowEvalPython and reads the projected lon there; a
+    # lat-only null just encodes to null.
+    return tagged.withColumn(
         "cell_id", rhp_encode(F.col("lon"), F.col("lat"), resolution, cfg)
-    )
+    ).where(F.col("lon").isNotNull())
 
 
 def pages_per_tile(
@@ -56,15 +56,16 @@ def pages_per_tile(
     urban cells."""
     from .functions.udfs import rhp_encode_index, rhp_index_parent, rhp_index_to_suid
 
-    tagged = extract_geotags(pages).where(F.col("lon").isNotNull())
     # Arrow-batched packed encode: an 8-byte int64 key through the
     # shuffle. (The pure-column encode in functions.column_encode is
     # 1.6x faster per core on bare chains but pays seconds of Catalyst
     # planning in composed plans — see its module docstring — so the
-    # Arrow kernel stays the pipeline default.)
-    enc = tagged.withColumn(
+    # Arrow kernel stays the pipeline default.) Untagged pages encode
+    # to null and drop after the UDF, so the html is decoded and
+    # scanned once per page (see encode_pages).
+    enc = extract_geotags(pages).withColumn(
         "cell_idx", rhp_encode_index(F.col("lon"), F.col("lat"), resolution, cfg)
-    )
+    ).where(F.col("cell_idx").isNotNull())
     keyed = enc.select(
         rhp_index_parent(F.col("cell_idx"), resolution, tile_res, cfg).alias(
             "tile_idx"

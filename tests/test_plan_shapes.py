@@ -3,6 +3,8 @@ optimizer picks IS the scale contract (SURVEY.md section 4.2), so we
 pin it — one shuffle for zonal stats, broadcast for tile painting, no
 Python in the bitwise hex7 hierarchy ops."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from rhealpixdggs_spark.operators.raster import (
@@ -272,6 +274,28 @@ class TestDistributedCoverPlans:
         # even-odd containment is column math, not a second UDF pass
         exec_plan = _plan(df)
         assert "BatchEvalPython" not in exec_plan
+
+    def test_pages_rollup_scans_html_once(self, spark):
+        """pages_per_tile and encode_pages filter AFTER the encode:
+        no Filter re-runs the decode + regexp_extract over html below
+        the Project that feeds the encode, and the encode is one
+        ArrowEvalPython."""
+        from rhealpixdggs_spark.pipeline import encode_pages, pages_per_tile
+        from rhealpixdggs_spark.sources.pages import synthesize_pages
+
+        pages = synthesize_pages(spark, 500, partitions=2)
+        for out in (pages_per_tile(pages, 9, 2), encode_pages(pages, 9)):
+            plan = _plan(out)
+            filters = [
+                ln for ln in plan.splitlines()
+                if re.match(r"[\s:+\-]*(\*\(\d+\) )?Filter ", ln)
+            ]
+            assert filters
+            assert not any("html" in ln for ln in filters), filters
+            assert plan.count("ArrowEvalPython") == 1
+        assert pages_per_tile(pages, 9, 2).where(
+            F.col("tile_id").isNull()
+        ).count() == 0
 
     def test_headline_rollup_shuffles_int64_not_strings(self, spark):
         """The pages rollup's shuffle key is the packed int64 index;
@@ -650,6 +674,38 @@ class TestPolygonJoinDFPlan:
         # the prefilter join key is the packed int64 index column
         assert "_idx" in plan
         assert out.limit(1).count() >= 0
+
+
+class TestFleetCandidatePlan:
+    def test_one_forward_pass_no_join_no_cap_udf(self, spark):
+        """fleet_candidate_idx emits band spans and polar-cap ring runs
+        from the same per-part rows: the per-part HEALPix-y pass runs
+        in ONE ArrowEvalPython, the cap path adds no Python stage, and
+        no join re-attaches per-zone bboxes."""
+        from rhealpixdggs_spark.kernel.constants import WGS84_003
+        from rhealpixdggs_spark.operators.tiling import (
+            fleet_candidate_idx,
+            polygons_to_df,
+            resolve_fleet_vertices,
+        )
+
+        zones = {
+            "band": [([(0.0, -5.0), (8.0, -5.0), (4.0, 6.0)], [])],
+            "ncap": [([(-10.0, 30.0), (10.0, 30.0), (0.0, 70.0)], [])],
+            "scap": [([(100.0, -45.0), (140.0, -50.0), (120.0, -75.0)], [])],
+        }
+        resolved = resolve_fleet_vertices(
+            polygons_to_df(spark, zones), WGS84_003, None, "t"
+        )
+        plan = _plan(fleet_candidate_idx(resolved, WGS84_003, 5))
+        arrow = [
+            ln for ln in plan.splitlines() if "ArrowEvalPython" in ln
+        ]
+        assert sum("_fwd_y" in ln for ln in arrow) == 1
+        # the other Arrow pass is the dateline resolve's _split
+        assert len(arrow) == 2
+        assert "Join" not in plan
+        assert "Union" not in plan
 
 
 class TestZoneTilesManyDFPlan:

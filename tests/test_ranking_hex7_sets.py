@@ -136,8 +136,9 @@ def test_cell_term_profile_plan_no_cartesian(spark):
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     logical = q._jdf.queryExecution().analyzed().toString()
-    # exactly one explicit broadcast hint: the 1-row stats side
-    assert logical.count("UnresolvedHint broadcast") <= 1
+    # exactly one explicit broadcast hint: the 1-row stats side (the
+    # analyzed plan renders hints resolved)
+    assert logical.count("ResolvedHint") == 1
 
 
 # ---------------------------------------------------------------------------

@@ -531,3 +531,145 @@ class TestZoneTilesManyDF:
             ).collect()
         )
         assert got == exp and len(got) > 0
+
+
+class TestCapCandidates:
+    """fleet_candidate_idx's closed-form polar-cap ring runs must stay
+    a superset: every point inside a part encodes to one of its zone's
+    candidate cells, for north and south cap parts, wedges across the
+    +/-180 seam and across each ring-corner meridian (-90, 0, 90), a
+    pole-holding part, and a radians config; and polygon_join_df must
+    equal a points_in_polygon brute force on that fleet."""
+
+    RES = 6
+    FLEET = {
+        "n_m90": [([(-100.0, 60.0), (-80.0, 60.0), (-85.0, 80.0),
+                    (-95.0, 78.0)], [])],
+        "n_0": [([(-8.0, 55.0), (9.0, 57.0), (2.0, 84.0)], [])],
+        "n_90": [([(85.0, 70.0), (96.0, 70.0), (92.0, 88.0),
+                   (88.0, 88.0)], [])],
+        # crosses the antimeridian: auto-split into two parts
+        "n_seam": [([(172.0, 50.0), (-172.0, 50.0), (-175.0, 75.0),
+                     (176.0, 75.0)], [])],
+        # lon-thin, near the cap edge, where the wedge pad is tightest
+        "n_thin": [([(176.0, 45.0), (180.0, 45.0), (178.0, 55.0)], [])],
+        "n_band": [([(30.0, 20.0), (50.0, 20.0), (40.0, 65.0)], [])],
+        "s_m90": [([(-99.0, -55.0), (-82.0, -58.0), (-90.0, -85.0)], [])],
+        "s_0": [(
+            [(-6.0, -48.0), (7.0, -48.0), (7.0, -75.0), (-6.0, -75.0)],
+            [[(-2.0, -55.0), (3.0, -55.0), (3.0, -65.0), (-2.0, -65.0)]],
+        )],
+        "s_90": [([(80.0, -80.0), (100.0, -80.0), (90.0, -50.0)], [])],
+        "s_seam": [([(178.0, -60.0), (-178.0, -60.0), (-179.0, -80.0),
+                     (179.0, -82.0)], [])],
+        # holds the north pole: spans every longitude up to lat 90
+        "npole": [([(-180.0, 80.0), (-90.0, 80.0), (0.0, 80.0),
+                    (90.0, 80.0), (180.0, 80.0), (180.0, 90.0),
+                    (90.0, 90.0), (0.0, 90.0), (-90.0, 90.0),
+                    (-180.0, 90.0)], [])],
+    }
+
+    def _fleet(self, cfg):
+        import numpy as np
+
+        if not cfg.radians:
+            return self.FLEET
+        conv = lambda ring: [tuple(np.radians(p)) for p in ring]  # noqa: E731
+        return {
+            z: [(conv(ext), [conv(h) for h in holes]) for ext, holes in parts]
+            for z, parts in self.FLEET.items()
+        }
+
+    def _inside_points(self, fleet, cfg):
+        """{zone: (lon, lat)} of points sampled inside each resolved
+        part, uniformly over its bbox and jittered along its edges."""
+        import numpy as np
+
+        from rhealpixdggs_spark.operators.tiling import _resolve_split_dateline
+
+        rng = np.random.default_rng(11)
+        out = {}
+        for z, polys in fleet.items():
+            lons, lats = [], []
+            for ext, holes in _resolve_split_dateline(polys, None, cfg, "t"):
+                e = np.asarray(ext, dtype=np.float64)
+                lo, hi = e.min(axis=0), e.max(axis=0)
+                u = rng.uniform(lo, hi, size=(3000, 2))
+                t = rng.uniform(0, 1, size=(3000, 1))
+                k = rng.integers(0, len(e), size=3000)
+                edge = e[k] + t * (e[(k + 1) % len(e)] - e[k])
+                edge += rng.normal(0, 1e-3, size=edge.shape) * (hi - lo)
+                cand = np.vstack([u, edge])
+                m = KR.points_in_polygon(cand[:, 0], cand[:, 1], ext, holes)
+                lons.append(cand[m, 0])
+                lats.append(cand[m, 1])
+            out[z] = (np.concatenate(lons), np.concatenate(lats))
+            assert out[z][0].size > 100, z
+        return out
+
+    @pytest.mark.parametrize("radians", [False, True])
+    def test_inside_points_encode_to_candidates(self, spark, radians):
+        import numpy as np
+
+        from rhealpixdggs_spark.kernel import cells as KC
+        from rhealpixdggs_spark.kernel.constants import WGS84_003_RADIANS
+        from rhealpixdggs_spark.operators.tiling import (
+            fleet_candidate_idx,
+            polygons_to_df,
+            resolve_fleet_vertices,
+        )
+
+        cfg = WGS84_003_RADIANS if radians else WGS84_003
+        fleet = self._fleet(cfg)
+        resolved = resolve_fleet_vertices(
+            polygons_to_df(spark, fleet), cfg, None, "t"
+        )
+        cand: dict = {}
+        for r in fleet_candidate_idx(resolved, cfg, self.RES).distinct().collect():
+            cand.setdefault(r.zone, set()).add(r._idx)
+        for z, (lon, lat) in self._inside_points(fleet, cfg).items():
+            idx = KC.encode_index(cfg, lon, lat, self.RES)
+            missing = np.setdiff1d(idx, np.fromiter(cand[z], dtype=np.int64))
+            assert missing.size == 0, (z, missing[:5])
+
+    @pytest.mark.parametrize("radians", [False, True])
+    def test_polygon_join_df_matches_brute_force(self, spark, radians):
+        import numpy as np
+        import pandas as pd
+
+        from rhealpixdggs_spark.kernel.constants import WGS84_003_RADIANS
+        from rhealpixdggs_spark.operators.joins import polygon_join_df
+        from rhealpixdggs_spark.operators.tiling import (
+            _resolve_split_dateline,
+            polygons_to_df,
+        )
+
+        cfg = WGS84_003_RADIANS if radians else WGS84_003
+        fleet = self._fleet(cfg)
+        half = np.pi if radians else 180.0
+        rng = np.random.default_rng(5)
+        sampled = self._inside_points(fleet, cfg).values()
+        lon = np.concatenate(
+            [s[0][:400] for s in sampled]
+            + [rng.uniform(-half, half, 4000)]
+        )
+        lat = np.concatenate(
+            [s[1][:400] for s in sampled]
+            + [np.arcsin(rng.uniform(-1, 1, 4000)) * half / np.pi]
+        )
+        exp = set()
+        for z, polys in fleet.items():
+            hit = np.zeros(lon.size, dtype=bool)
+            for ext, holes in _resolve_split_dateline(polys, None, cfg, "t"):
+                hit |= KR.points_in_polygon(lon, lat, ext, holes)
+            exp |= {(int(i), z) for i in np.flatnonzero(hit)}
+        pts = spark.createDataFrame(
+            pd.DataFrame({"pid": np.arange(lon.size), "lon": lon, "lat": lat})
+        )
+        got = {
+            (r.pid, r.zone)
+            for r in polygon_join_df(
+                pts, polygons_to_df(spark, fleet), res=self.RES, cfg=cfg
+            ).select("pid", "zone").collect()
+        }
+        assert got == exp and len(exp) > 1000

@@ -21,7 +21,7 @@ gc_frac is large, it is allocation pressure.
 
 Skew check: the candidate rows that feed the centroid pass come out of
 a distinct() Exchange hashed on (zone, _idx) — we reproduce the cap
-candidate generator (the shared _cap_candidate_cells helper) on the
+candidate generator (the shared _part_candidate_idx helper) on the
 same fleet and report rows per post-shuffle partition (max/mean = skew
 factor). A factor near 1 exonerates partitioning.
 
