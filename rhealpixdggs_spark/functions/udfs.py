@@ -148,45 +148,34 @@ def rhp_index_parent(cell_idx: Column, res: int, parent_res: int,
 
 def rhp_index_to_suid(cell_idx: Column, resolution: int,
                       cfg: DggsConfig = WGS84_003) -> Column:
-    """Packed index -> suid string (decode-on-demand boundary).
+    """Packed index -> suid string (decode-on-demand boundary), as
+    column math with no Python stage.
 
-    For N_side=3 (the public grid) this is column math, no Python
-    stage: with rem = idx - ind(res), the face letter is
-    CELLS0[rem div 9^res] and the digits are rem mod 9^res written in
-    base 9, left-padded to `resolution` places (cell.py:89-119).
-    Nulls stay null. Other N_side fall back to the kernel codec in an
-    Arrow UDF."""
-    if cfg.N_side == 3:
-        base = cfg.num_cells(0, resolution - 1) if resolution > 0 else 0
-        span = 9**resolution
-        rem = cell_idx.cast("long") - F.lit(base)
-        digits = F.pmod(rem, F.lit(span))
-        # exact integer quotient: rem - digits is a multiple of span
-        face = ((rem - digits) / F.lit(span)).cast("int")
-        # out-of-range indices decode to null rather than raise
-        letter = F.when(
-            face.between(0, len(CELLS0) - 1),
-            F.element_at(F.array(*[F.lit(c) for c in CELLS0]), face + 1),
+    With b = N_side**2 and rem = idx - ind(res), the face letter is
+    CELLS0[rem div b^res] and the digits are rem mod b^res written in
+    base b, left-padded to `resolution` places (cell.py:89-119). Suids
+    are single-digit strings only for b < 10 (cell.py:181-188), so
+    other N_side raise. Nulls and out-of-range indices decode to
+    null."""
+    b = cfg.N_side**2
+    if b >= 10:
+        raise ValueError(
+            f"suid strings need N_side**2 < 10, got N_side={cfg.N_side}"
         )
-        if resolution == 0:
-            return letter
-        return F.concat(
-            letter,
-            F.lpad(F.conv(digits.cast("string"), 10, 9), resolution, "0"),
-        )
-
-    @pandas_udf(T.StringType())
-    def _dec(idx: pd.Series) -> pd.Series:
-        mask = idx.notna()
-        out = pd.Series([None] * len(idx), index=idx.index, dtype=object)
-        if mask.any():
-            f, d = KC.suid_from_level_order_index(
-                cfg, idx[mask].to_numpy(dtype=np.int64), resolution
-            )
-            out[mask] = KC.suid_strings(f, d)
-        return out
-
-    return _dec.asNondeterministic()(cell_idx)
+    base = cfg.num_cells(0, resolution - 1) if resolution > 0 else 0
+    span = b**resolution
+    rem = cell_idx.cast("long") - F.lit(base)
+    # face by exact long comparisons, no division through a double
+    letter = F.when(rem < 0, F.lit(None).cast("string"))
+    for f, c in enumerate(CELLS0):
+        letter = letter.when(rem < F.lit((f + 1) * span), F.lit(c))
+    if resolution == 0:
+        return letter
+    digits = F.pmod(rem, F.lit(span))
+    return F.concat(
+        letter,
+        F.lpad(F.conv(digits.cast("string"), 10, b), resolution, "0"),
+    )
 
 
 def _decode_udf(cfg: DggsConfig, fn, ret_type):

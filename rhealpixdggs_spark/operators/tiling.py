@@ -58,7 +58,7 @@ def grid(spark: SparkSession, resolution: int, cfg: DggsConfig = WGS84_003,
 
     Distributed: spark.range over the level-order index interval
     (cell.py:93-98), suid materialized by the index codec
-    (rhp_index_to_suid: column math for N_side=3, cell.py:89-119)."""
+    (rhp_index_to_suid: column math, cell.py:89-119)."""
     from ..functions.udfs import rhp_index_to_suid
 
     lo = cfg.num_cells(0, resolution - 1) if resolution > 0 else 0

@@ -3,6 +3,7 @@ NumPy kernels (and hence the reference goldens) through the Arrow
 boundary."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from rhealpixdggs_spark.functions import (
@@ -135,35 +136,39 @@ def test_explain_encode_is_arrow(spark):
     assert "ArrowEvalPython" in plan
 
 
-def test_index_to_suid_column_math_matches_kernel(spark):
-    """The N_side=3 index->suid codec is column math (no Python
-    stage); it must equal the kernel codec on each face's first and
-    last index at every resolution 0-15, and on 10^6 random indices
-    spread over those resolutions."""
+@pytest.mark.parametrize("n_side", [3, 2])
+def test_index_to_suid_column_math_matches_kernel(spark, n_side):
+    """The index->suid codec is column math (no Python stage); it must
+    equal the kernel codec on each face's first and last index at
+    every resolution 0-15, and on 10^6 random indices spread over
+    those resolutions (N_side=3), and in base 4 for N_side=2."""
+    import pandas as pd
+
     from rhealpixdggs_spark.functions.udfs import rhp_index_to_suid
     from rhealpixdggs_spark.kernel import cells as KC
+    from rhealpixdggs_spark.kernel.constants import DggsConfig
 
-    cfg = WGS84_003
+    cfg = WGS84_003 if n_side == 3 else DggsConfig(N_side=n_side)
+    b = n_side**2
+    n_rand = 62_500 if n_side == 3 else 2_000
     rng = np.random.default_rng(7)
     res_all, idx_all = [], []
     for r in range(16):
         lo = cfg.num_cells(0, r - 1) if r > 0 else 0
-        per_face = 9**r
+        per_face = b**r
         edges = [lo + f * per_face + d for f in range(6) for d in (0, per_face - 1)]
-        rand = rng.integers(lo, lo + 6 * per_face, size=62_500, dtype=np.int64)
+        rand = rng.integers(lo, lo + 6 * per_face, size=n_rand, dtype=np.int64)
         idx = np.concatenate([np.array(edges, dtype=np.int64), rand])
         res_all.append(np.full(idx.shape[0], r, dtype=np.int64))
         idx_all.append(idx)
     res_a = np.concatenate(res_all)
     idx_a = np.concatenate(idx_all)
-    assert idx_a.shape[0] > 10**6
+    assert idx_a.shape[0] > (10**6 if n_side == 3 else 30_000)
     exp = np.empty(idx_a.shape[0], dtype=object)
     for r in range(16):
         m = res_a == r
         f, d = KC.suid_from_level_order_index(cfg, idx_a[m], r)
         exp[m] = KC.suid_strings(f, d)
-
-    import pandas as pd
 
     df = spark.createDataFrame(pd.DataFrame({"res": res_a, "idx": idx_a}))
     suid = F.coalesce(*[
@@ -175,8 +180,18 @@ def test_index_to_suid_column_math_matches_kernel(spark):
     got = out.toPandas()
     assert (got["idx"].to_numpy() == idx_a).all()
     assert (got["s"].to_numpy(dtype=object) == exp).all()
-    # nulls stay null
-    nul = spark.createDataFrame([(None,)], "idx long").select(
-        rhp_index_to_suid(F.col("idx"), 3, cfg).alias("s")
-    )
-    assert nul.first().s is None
+    # nulls and out-of-range indices decode to null
+    lo3 = cfg.num_cells(0, 2)
+    odd = spark.createDataFrame(
+        [(None,), (lo3 - 1,), (lo3 + 6 * b**3,)], "idx long"
+    ).select(rhp_index_to_suid(F.col("idx"), 3, cfg).alias("s"))
+    assert [r.s for r in odd.collect()] == [None, None, None]
+
+
+def test_index_to_suid_rejects_multi_digit_bases():
+    """Suids are single-digit strings only for N_side**2 < 10."""
+    from rhealpixdggs_spark.functions.udfs import rhp_index_to_suid
+    from rhealpixdggs_spark.kernel.constants import DggsConfig
+
+    with pytest.raises(ValueError, match="N_side"):
+        rhp_index_to_suid(F.col("idx"), 3, DggsConfig(N_side=4))

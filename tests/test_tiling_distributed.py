@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rhealpixdggs_spark.kernel import regions as KR
-from rhealpixdggs_spark.kernel.constants import WGS84_003
+from rhealpixdggs_spark.kernel.constants import WGS84_003, DggsConfig
 from rhealpixdggs_spark.operators.tiling import polyfill_df, region_cover_ell_df
 
 REGIONS = [
@@ -539,9 +539,16 @@ class TestCapCandidates:
     candidate cells, for north and south cap parts, wedges across the
     +/-180 seam and across each ring-corner meridian (-90, 0, 90), a
     pole-holding part, and a radians config; and polygon_join_df must
-    equal a points_in_polygon brute force on that fleet."""
+    equal a points_in_polygon brute force on that fleet. The configs
+    cover the ring-start term of each rotated polar square too."""
 
     RES = 6
+    CFGS = {
+        "deg": DggsConfig(),
+        "rad": DggsConfig(radians=True),
+        "deg_sq12": DggsConfig(north_square=1, south_square=2),
+        "rad_sq31": DggsConfig(north_square=3, south_square=1, radians=True),
+    }
     FLEET = {
         "n_m90": [([(-100.0, 60.0), (-80.0, 60.0), (-85.0, 80.0),
                     (-95.0, 78.0)], [])],
@@ -607,19 +614,18 @@ class TestCapCandidates:
             assert out[z][0].size > 100, z
         return out
 
-    @pytest.mark.parametrize("radians", [False, True])
-    def test_inside_points_encode_to_candidates(self, spark, radians):
+    @pytest.mark.parametrize("cfg_id", list(CFGS))
+    def test_inside_points_encode_to_candidates(self, spark, cfg_id):
         import numpy as np
 
         from rhealpixdggs_spark.kernel import cells as KC
-        from rhealpixdggs_spark.kernel.constants import WGS84_003_RADIANS
         from rhealpixdggs_spark.operators.tiling import (
             fleet_candidate_idx,
             polygons_to_df,
             resolve_fleet_vertices,
         )
 
-        cfg = WGS84_003_RADIANS if radians else WGS84_003
+        cfg = self.CFGS[cfg_id]
         fleet = self._fleet(cfg)
         resolved = resolve_fleet_vertices(
             polygons_to_df(spark, fleet), cfg, None, "t"
@@ -632,21 +638,20 @@ class TestCapCandidates:
             missing = np.setdiff1d(idx, np.fromiter(cand[z], dtype=np.int64))
             assert missing.size == 0, (z, missing[:5])
 
-    @pytest.mark.parametrize("radians", [False, True])
-    def test_polygon_join_df_matches_brute_force(self, spark, radians):
+    @pytest.mark.parametrize("cfg_id", list(CFGS))
+    def test_polygon_join_df_matches_brute_force(self, spark, cfg_id):
         import numpy as np
         import pandas as pd
 
-        from rhealpixdggs_spark.kernel.constants import WGS84_003_RADIANS
         from rhealpixdggs_spark.operators.joins import polygon_join_df
         from rhealpixdggs_spark.operators.tiling import (
             _resolve_split_dateline,
             polygons_to_df,
         )
 
-        cfg = WGS84_003_RADIANS if radians else WGS84_003
+        cfg = self.CFGS[cfg_id]
         fleet = self._fleet(cfg)
-        half = np.pi if radians else 180.0
+        half = np.pi if cfg.radians else 180.0
         rng = np.random.default_rng(5)
         sampled = self._inside_points(fleet, cfg).values()
         lon = np.concatenate(
