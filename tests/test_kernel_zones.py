@@ -1,9 +1,14 @@
-"""Zone rasterization vs the reference's 493-cell catchment golden.
+"""Zone rasterization vs the reference's published catchment golden.
 
-The WKT geometry and ground-truth cell list are parsed from the
-reference's own test file at test time (they are expected values, not
-code)."""
+The catchment 12104622 polygon and its ground-truth zone (254 distinct
+cells at res 7-9) are the reference's own expected values for
+conversion.CellZoneFromPoly (its tests/test_conversion.py:17-55,
+58-537), vendored into rhealpixdggs_spark/data/catchment_12104622.json.
+Where a reference checkout is present, its test file is parsed as well
+and must agree with the vendored copy."""
 
+import json
+import os
 import re
 
 import numpy as np
@@ -13,11 +18,14 @@ from rhealpixdggs_spark.kernel.constants import WGS84_003
 from rhealpixdggs_spark.kernel.zones import get_finest_containing_cell, zone_from_poly
 
 TEST_FILE = "/root/reference/tests/test_conversion.py"
+GOLDEN = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "rhealpixdggs_spark", "data", "catchment_12104622.json",
+)
 
 
-@pytest.fixture(scope="module")
-def catchment():
-    src = open(TEST_FILE).read()
+def _parse_reference(path):
+    src = open(path).read()
     wkt = re.search(r'MULTIPOLYGON \(\(\((.*?)\)\)\)', src, re.S).group(1)
     coords = [
         tuple(map(float, p.split()))
@@ -28,6 +36,17 @@ def catchment():
     )[1].split("]")[0]
     cells = re.findall(r'"(R78\d+)"', block)
     return coords, set(cells)
+
+
+@pytest.fixture(scope="module")
+def catchment():
+    with open(GOLDEN) as f:
+        d = json.load(f)
+    coords, cells = [tuple(p) for p in d["polygon"]], set(d["cells"])
+    if os.path.exists(TEST_FILE):
+        # The vendored copy must not drift from the reference's own file.
+        assert _parse_reference(TEST_FILE) == (coords, cells)
+    return coords, cells
 
 
 def test_finest_containing_cell(catchment):
