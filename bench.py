@@ -1,12 +1,14 @@
 #!/usr/bin/env python
 """Benchmark harness.
 
-Default mode (what the driver runs): execute the headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
+Default mode: execute the headline queries at $SPARK_GRAFT_SF_DIR
+(default SF_DIR) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line
+of at most LINE_MAX chars (result_line):
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec}, "sf": ..., "pages_per_sec": ...,
-   "scaling": {...present if BENCH/scaling.json exists...}}
+   "queries": {name: sec}, "iqr": {name: sec}, "sf": ...,
+   "pages_per_sec": ..., "detail": "BENCH/headline_detail.json",
+   "scaling": {...summary, present if BENCH/scaling.json exists...}}
+The full result (per-query min/max/runs) goes to the detail file.
 
 Scaling mode (--scaling): run the encode+join pages job at two
 parallelism levels (local[8] vs local[32]) in separate processes on the
@@ -30,10 +32,12 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPO = os.path.dirname(os.path.abspath(__file__))
 
 
-def _spark(master: str):
+def _spark(master: str, **kw):
     from rhealpixdggs_spark.session import get_spark
 
-    return get_spark(app_name="bench", master=master)
+    # no console progress bar: stdout must end with the one JSON line
+    return get_spark(app_name="bench", master=master,
+                     extra_conf={"spark.ui.showConsoleProgress": "false"}, **kw)
 
 
 _SF_TABLES = [
@@ -157,6 +161,32 @@ def _warm_up(spark):
 
 
 HEADLINE_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
+# encode_join_pages has its own loop in run_headline; the rest run as
+# queries() entries or the local scale-path variants.
+HEADLINE_QUERIES = [
+    "encode_join_pages",
+    "encode_points_res9",
+    "parent_rollup",
+    "containment_join",
+    "knn_rings",
+    "minhash_sig",
+    "minhash_sig_xxhash64",
+    "cosine_topk",
+    "tpch_pricing",
+    "revenue_by_nation",
+    "raster_to_vector",
+    "polyfill_fleet",
+    "polyfill_fleet_mixed",
+    "polyfill_fleet_df",
+    "curation_pipeline",
+    "bm25_topk",
+    "pagerank",
+    "interval_join",
+]
+# The line's consumer keeps a 2,000-char tail of stdout.
+LINE_MAX = 1800
+SCALING_ARTIFACT = "BENCH/scaling.json"
+HEADLINE_DETAIL = "BENCH/headline_detail.json"
 
 
 def _median_iqr(samples: list[float]) -> tuple[float, float]:
@@ -272,25 +302,7 @@ def run_headline(spark, sf_dir: str) -> dict:
     qs["polyfill_fleet"] = _polyfill_fleet
     qs["polyfill_fleet_mixed"] = _polyfill_fleet_mixed
     qs["polyfill_fleet_df"] = _polyfill_fleet_df
-    for name in [
-        "encode_points_res9",
-        "parent_rollup",
-        "containment_join",
-        "knn_rings",
-        "minhash_sig",
-        "minhash_sig_xxhash64",
-        "cosine_topk",
-        "tpch_pricing",
-        "revenue_by_nation",
-        "raster_to_vector",
-        "polyfill_fleet",
-        "polyfill_fleet_mixed",
-        "polyfill_fleet_df",
-        "curation_pipeline",
-        "bm25_topk",
-        "pagerank",
-        "interval_join",
-    ]:
+    for name in HEADLINE_QUERIES[1:]:
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs = []
         for _ in range(HEADLINE_RUNS):
@@ -322,9 +334,7 @@ def single_run(master: str, sf_dir: str, n_pages: int | None = None,
                n_points: int | None = None) -> dict:
     # Fixed shuffle partitioning at both cluster sizes: the scaling
     # comparison must be a cores-only delta, not a partitioning delta.
-    from rhealpixdggs_spark.session import get_spark
-
-    spark = get_spark(app_name="bench", master=master, shuffle_partitions=64)
+    spark = _spark(master, shuffle_partitions=64)
     try:
         _warm_up(spark)
         # Steady state: first pass pays JVM JIT + page-cache warm; the
@@ -454,6 +464,43 @@ def scaling_protocol(sf_dir: str, masters=(2, 8, 16, 32)) -> dict:
     }
 
 
+def scaling_summary(artifact: str) -> dict | None:
+    """The scaling protocol's headline from its artifact (a path
+    relative to the checkout): the N->4N efficiency and the 2->8 pair.
+    The runs, controls and history stay in the file the summary names."""
+    path = os.path.join(REPO, artifact)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        sc = json.load(f)
+    return {"scaling_efficiency": sc["scaling_efficiency"],
+            "2to8": sc["pairs"].get("2to8"), "artifact": artifact}
+
+
+def result_line(res: dict, sf: float) -> dict:
+    """The default mode's stdout line: per-query medians and IQRs, the
+    box's CPU control and the scaling summary. Its JSON stays within
+    LINE_MAX chars; min/max/run counts go to HEADLINE_DETAIL."""
+    out = {
+        "metric": "headline suite wall time (encode+join pages pipeline "
+                  "res9->res2 + spatial/dedup/similarity/relational queries; "
+                  "median of %d runs per query)" % HEADLINE_RUNS,
+        "value": round(sum(res["timings"].values()), 3),
+        "unit": "sec",
+        "queries": res["timings"],
+        "iqr": {k: v["iqr"] for k, v in res["dispersion"].items()},
+        "cpu_control": res["cpu_control"],
+        "sf": sf,
+        "n_pages": res["n_pages"],
+        "pages_per_sec": res["pages_per_sec"],
+        "detail": HEADLINE_DETAIL,
+    }
+    scaling = scaling_summary(SCALING_ARTIFACT)
+    if scaling:
+        out["scaling"] = scaling
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=SF_DIR)
@@ -518,7 +565,7 @@ def main():
             res["history"] = hist
         with open(path, "w") as f:
             json.dump(res, f, indent=1)
-        print(json.dumps(res))
+        print(json.dumps(scaling_summary(os.path.relpath(path, REPO))))
         return
 
     spark = _spark(args.master)
@@ -531,23 +578,9 @@ def main():
         sf = str(float(args.sf_dir.rstrip("/").rsplit("_", 1)[-1]) * args.sf_mult)
     else:
         sf = args.sf_dir.rstrip("/").split("sf")[-1]
-    out = {
-        "metric": "headline suite wall time (encode+join pages pipeline "
-                  "res9->res2 + spatial/dedup/similarity/relational queries; "
-                  "median of %d runs per query)" % HEADLINE_RUNS,
-        "value": round(sum(res["timings"].values()), 3),
-        "unit": "sec",
-        "queries": res["timings"],
-        "dispersion": res["dispersion"],
-        "cpu_control": res["cpu_control"],
-        "sf": float(sf),
-        "n_pages": res["n_pages"],
-        "pages_per_sec": res["pages_per_sec"],
-    }
-    scaling_path = os.path.join(REPO, "BENCH", "scaling.json")
-    if os.path.exists(scaling_path):
-        with open(scaling_path) as f:
-            out["scaling"] = json.load(f)
+    out = result_line(res, float(sf))
+    with open(os.path.join(REPO, HEADLINE_DETAIL), "w") as f:
+        json.dump({"line": out, "result": res}, f, indent=1)
     print(json.dumps(out))
 
 

@@ -57,11 +57,11 @@ def pages_per_tile(
     from .functions.udfs import rhp_encode_index, rhp_index_parent, rhp_index_to_suid
 
     # Arrow-batched packed encode: an 8-byte int64 key through the
-    # shuffle. (The pure-column encode in functions.column_encode is
-    # 1.6x faster per core on bare chains but pays seconds of Catalyst
-    # planning in composed plans — see its module docstring — so the
-    # Arrow kernel stays the pipeline default.) Untagged pages encode
-    # to null and drop after the UDF, so the html is decoded and
+    # shuffle, one opaque plan node. (An all-column encode was measured
+    # here and deleted: Catalyst's physical planning re-expanded its
+    # alias chain, 12-21 s of planning per full_grid_rollup against
+    # 0.6-1.6 s for a whole warm run with this UDF.) Untagged pages
+    # encode to null and drop after the UDF, so the html is decoded and
     # scanned once per page (see encode_pages).
     enc = extract_geotags(pages).withColumn(
         "cell_idx", rhp_encode_index(F.col("lon"), F.col("lat"), resolution, cfg)
