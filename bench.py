@@ -373,10 +373,10 @@ def _points_parquet(spark, n: int) -> str:
 
 def bench_points_encode_join(spark, n: int) -> tuple[float, int]:
     """Engine-stage scaling job: points scan -> res-9 encode -> res-2
-    rollup -> broadcast grid join. No html decode: the UTF-16 decode
-    of the raw scan is single-box memory-bandwidth-bound, which a real
-    cluster scales with nodes, so the two-size comparison isolates the
-    engine's own stages."""
+    rollup aggregated with the full grid (one union-aggregate). No html
+    decode: the UTF-16 decode of the raw scan is single-box
+    memory-bandwidth-bound, which a real cluster scales with nodes, so
+    the two-size comparison isolates the engine's own stages."""
     from rhealpixdggs_spark.pipeline import points_grid_rollup
 
     path = _points_parquet(spark, n)

@@ -11,6 +11,12 @@ Design rules (SURVEY.md section 2.3/4.2):
   closure (tiny, broadcast with the task).
 - Mixed-resolution batches are grouped by suid length inside the UDF
   (the kernels are uniform-resolution).
+- The packed-index codecs (rhp_index_parent, rhp_index_to_suid) take
+  the key as a SQL expression string and return one F.expr: each F.*
+  call is several driver->JVM round trips, one expr a single parse.
+- UDF objects are built per call, never cached at module level: a
+  pandas_udf keeps the JVM function of the first session it ran in
+  (UserDefinedFunction._judf_placeholder), and sessions restart.
 """
 
 from __future__ import annotations
@@ -106,8 +112,8 @@ def rhp_encode(
 
 
 def rhp_encode_index(
-    lon: Column, lat: Column, resolution: int, cfg: DggsConfig = WGS84_003,
-    plane: bool = False,
+    lon: Column | str, lat: Column | str, resolution: int,
+    cfg: DggsConfig = WGS84_003, plane: bool = False,
 ) -> Column:
     """(lon, lat) -> packed int64 level-order cell index — the scale
     path. An 8-byte shuffle/join key instead of a 10-50-byte string;
@@ -133,23 +139,25 @@ def rhp_encode_index(
     return _enc.asNondeterministic()(lon, lat)
 
 
-def rhp_index_parent(cell_idx: Column, res: int, parent_res: int,
+def rhp_index_parent(cell_idx: str, res: int, parent_res: int,
                      cfg: DggsConfig = WGS84_003) -> Column:
     """Packed-index hierarchy rollup, pure integer column math:
-    parent_idx = base_p + (idx - base_r) div b^(r-p)."""
+    parent_idx = base_p + (idx - base_r) div b^(r-p). `cell_idx` is a
+    SQL expression (a column name or any long-valued expression)."""
     b = cfg.N_side**2
     base_r = cfg.num_cells(0, res - 1) if res > 0 else 0
     base_p = cfg.num_cells(0, parent_res - 1) if parent_res > 0 else 0
-    return (
-        F.floor((cell_idx - F.lit(base_r)) / F.lit(b ** (res - parent_res)))
-        + F.lit(base_p)
-    ).cast("long")
+    return F.expr(
+        f"CAST(floor((({cell_idx}) - {base_r}L) / {b ** (res - parent_res)}L)"
+        f" + {base_p}L AS BIGINT)"
+    )
 
 
-def rhp_index_to_suid(cell_idx: Column, resolution: int,
+def rhp_index_to_suid(cell_idx: str, resolution: int,
                       cfg: DggsConfig = WGS84_003) -> Column:
     """Packed index -> suid string (decode-on-demand boundary), as
-    column math with no Python stage.
+    column math with no Python stage. `cell_idx` is a SQL expression
+    (a column name or any long-valued expression).
 
     With b = N_side**2 and rem = idx - ind(res), the face letter is
     CELLS0[rem div b^res] and the digits are rem mod b^res written in
@@ -164,17 +172,20 @@ def rhp_index_to_suid(cell_idx: Column, resolution: int,
         )
     base = cfg.num_cells(0, resolution - 1) if resolution > 0 else 0
     span = b**resolution
-    rem = cell_idx.cast("long") - F.lit(base)
+    rem = f"(CAST(({cell_idx}) AS BIGINT) - {base}L)"
     # face by exact long comparisons, no division through a double
-    letter = F.when(rem < 0, F.lit(None).cast("string"))
-    for f, c in enumerate(CELLS0):
-        letter = letter.when(rem < F.lit((f + 1) * span), F.lit(c))
+    letter = "CASE WHEN {r} < 0L THEN NULL {faces} END".format(
+        r=rem,
+        faces=" ".join(
+            f"WHEN {rem} < {(f + 1) * span}L THEN '{c}'"
+            for f, c in enumerate(CELLS0)
+        ),
+    )
     if resolution == 0:
-        return letter
-    digits = F.pmod(rem, F.lit(span))
-    return F.concat(
-        letter,
-        F.lpad(F.conv(digits.cast("string"), 10, b), resolution, "0"),
+        return F.expr(letter)
+    return F.expr(
+        f"concat({letter}, lpad(conv(CAST(pmod({rem}, {span}L) AS STRING),"
+        f" 10, {b}), {resolution}, '0'))"
     )
 
 

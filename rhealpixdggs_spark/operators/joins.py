@@ -771,6 +771,6 @@ def containment_join_idx(
     first_child(tile) AND last_child(tile) on the same keys."""
     from ..functions.udfs import rhp_index_parent
 
-    key = rhp_index_parent(F.col(point_idx), point_res, tile_res, cfg)
+    key = rhp_index_parent(f"`{point_idx}`", point_res, tile_res, cfg)
     t = F.broadcast(tiles) if broadcast_tiles else tiles
     return points.join(t, key == F.col(tile_idx), how)

@@ -52,21 +52,27 @@ def _resolve_split_dateline(polys, split_dateline, cfg, opname: str):
     return list(polys)
 
 
+def grid_ids(spark: SparkSession, resolution: int, cfg: DggsConfig = WGS84_003,
+             partitions: int | None = None) -> DataFrame:
+    """The level-order indices of all cells at a resolution, as
+    spark.range's `id` column over their interval (cell.py:93-98)."""
+    lo = cfg.num_cells(0, resolution - 1) if resolution > 0 else 0
+    hi = lo + 6 * cfg.N_side ** (2 * resolution)
+    return spark.range(lo, hi, numPartitions=partitions)
+
+
 def grid(spark: SparkSession, resolution: int, cfg: DggsConfig = WGS84_003,
          partitions: int | None = None) -> DataFrame:
     """All cells at a resolution as (cell_id string, cell_idx long).
 
-    Distributed: spark.range over the level-order index interval
-    (cell.py:93-98), suid materialized by the index codec
-    (rhp_index_to_suid: column math, cell.py:89-119)."""
+    Distributed: grid_ids' spark.range over the level-order index
+    interval, suid materialized by the index codec (rhp_index_to_suid:
+    column math, cell.py:89-119)."""
     from ..functions.udfs import rhp_index_to_suid
 
-    lo = cfg.num_cells(0, resolution - 1) if resolution > 0 else 0
-    hi = lo + 6 * cfg.N_side ** (2 * resolution)
-    rng = spark.range(lo, hi, numPartitions=partitions)
-    return rng.select(
-        rhp_index_to_suid(F.col("id"), resolution, cfg).alias("cell_id"),
-        F.col("id").alias("cell_idx"),
+    return grid_ids(spark, resolution, cfg, partitions).select(
+        rhp_index_to_suid("id", resolution, cfg).alias("cell_id"),
+        F.expr("id AS cell_idx"),
     )
 
 
@@ -950,21 +956,19 @@ def _dbl(x: float) -> str:
     return f"{float(x)!r}D"
 
 
-def _interleave_idx(cfg: DggsConfig, res: int, face: str, i: str, j: str):
-    """Level-order index of the res-`res` cell at (row i, col j) of
-    planar face `face` (SQL expressions over integer columns) — the
-    digit-interleave closed form shared by the band and cap candidate
-    generators and region_cover_ell_df (cell.py:93-119 index
-    semantics): idx = ind(res) + face*9^res + 3*spread(i) + spread(j),
-    where spread reads i's base-3 digits as base-9 digits, i.e.
-    conv(conv(i, 10, 3), 9, 10). N_side=3 only."""
+def _interleave_idx(cfg: DggsConfig, res: int, face: str, i: str, j: str) -> str:
+    """SQL expression for the level-order index of the res-`res` cell
+    at (row i, col j) of planar face `face` (SQL expressions over
+    integer columns) — the digit-interleave closed form shared by the
+    band and cap candidate generators and region_cover_ell_df
+    (cell.py:93-119 index semantics): idx = ind(res) + face*9^res +
+    3*spread(i) + spread(j), where spread reads i's base-3 digits as
+    base-9 digits, i.e. conv(conv(i, 10, 3), 9, 10). N_side=3 only."""
     def spread(c: str) -> str:
         return f"CAST(conv(conv(CAST({c} AS STRING), 10, 3), 9, 10) AS BIGINT)"
 
     base = cfg.num_cells(0, res - 1) if res > 0 else 0
-    return F.expr(
-        f"{base}L + ({face}) * {9**res}L + 3 * {spread(i)} + {spread(j)}"
-    )
+    return f"{base}L + ({face}) * {9**res}L + 3 * {spread(i)} + {spread(j)}"
 
 
 def _part_candidate_idx(
@@ -1098,8 +1102,8 @@ def _part_candidate_idx(
         f"IF(face < 0, k, {c0} + IF(face = 0, -1, 1) * ({dy})) AS i",
         f"IF(face < 0, v % {n3}, {c0} + {dx}) AS j",
     )
-    return cells.select(
-        "zone", _interleave_idx(cfg, res, "f", "i", "j").alias("_idx")
+    return cells.selectExpr(
+        "zone", f"{_interleave_idx(cfg, res, 'f', 'i', 'j')} AS _idx"
     )
 
 
@@ -1198,7 +1202,7 @@ def polyfill_many(
         keyed.select("_idx")
         .distinct()
         .repartition(fanout)
-        .select("_idx", rhp_index_to_suid(F.col("_idx"), res, cfg).alias("tile_id"))
+        .select("_idx", rhp_index_to_suid("_idx", res, cfg).alias("tile_id"))
         .withColumn("_c", rhp_centroid(F.col("tile_id"), cfg, plane=False))
     )
     cand = keyed.distinct().join(cells, "_idx").select("zone", "tile_id", "_c")
@@ -1510,7 +1514,7 @@ def polyfill_many_df(
     cells = (
         pairs.select("_idx").distinct()
         .repartition(fanout)
-        .select("_idx", rhp_index_to_suid(F.col("_idx"), res, cfg).alias("tile_id"))
+        .select("_idx", rhp_index_to_suid("_idx", res, cfg).alias("tile_id"))
         .withColumn("_c", rhp_centroid(F.col("tile_id"), cfg, plane=False))
         .select(
             "_idx", "tile_id",

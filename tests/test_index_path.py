@@ -45,9 +45,9 @@ def test_spark_index_path(spark, rng):
     out = df.select(
         rhp_encode(F.col("lon"), F.col("lat"), 7).alias("cell_id"),
         rhp_encode_index(F.col("lon"), F.col("lat"), 7).alias("cell_idx"),
-    ).withColumn("decoded", rhp_index_to_suid(F.col("cell_idx"), 7)).withColumn(
-        "tile_idx", rhp_index_parent(F.col("cell_idx"), 7, 2)
-    ).withColumn("tile_decoded", rhp_index_to_suid(F.col("tile_idx"), 2))
+    ).withColumn("decoded", rhp_index_to_suid("cell_idx", 7)).withColumn(
+        "tile_idx", rhp_index_parent("cell_idx", 7, 2)
+    ).withColumn("tile_decoded", rhp_index_to_suid("tile_idx", 2))
     bad = out.where(
         (F.col("cell_id") != F.col("decoded"))
         | (F.substring("cell_id", 1, 3) != F.col("tile_decoded"))

@@ -242,7 +242,7 @@ class TestOracleParity:
             ]
             assert list(mine) == theirs, res
 
-    def test_nucleus_roundtrip_grid(self, ref):
+    def test_nucleus_roundtrip_grid(self):
         # tests/test_dggs.py:122-129 analogue over the whole res-2 grid.
         cfg = WGS84_003
         idx0 = cfg.num_cells(0, 1)

@@ -23,7 +23,7 @@ def test_interior_matches_reference(ref):
     assert [(float(e[0]), float(e[1])) for e in exp] == [tuple(p) for p in got]
 
 
-def test_interior_points_are_contained(ref):
+def test_interior_points_are_contained():
     f, d = C.parse_suids(A(["Q3", "N4"]))
     pts = FX.cell_interior(WGS84_003, f, d, n=4, plane=True)
     for r, suid in enumerate(["Q3", "N4"]):

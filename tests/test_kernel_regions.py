@@ -83,7 +83,7 @@ class TestRegionCovers:
             ["S4"],
         ]
 
-    def test_cells_from_region_doctest_degrees(self, ref):
+    def test_cells_from_region_doctest_degrees(self):
         # dggs.py:72-82 ((1,2)-DGGS, degrees)
         from rhealpixdggs_spark.kernel.constants import DggsConfig
 

@@ -107,6 +107,72 @@ class TestPipeline:
         assert bad.isEmpty()
 
 
+def _expected_rollup(pages, resolution, tile_res):
+    """{tile_id: (n_pages, n_langs)} over every res-`tile_res` tile,
+    computed off Spark from the collected html and lang: Python regex
+    geotag parse, NumPy encode_index, integer parent, bincount."""
+    import re
+
+    import numpy as np
+
+    from rhealpixdggs_spark.kernel import cells as KC
+    from rhealpixdggs_spark.kernel.constants import WGS84_003 as cfg
+
+    lon, lat, lang = [], [], []
+    for r in pages.select("html", "lang").collect():
+        m = re.search(r'geo\.position" content="([^"]*)"', bytes(r.html).decode("utf-8"))
+        if m is None:
+            continue
+        la, lo = m.group(1).replace(",", "").split(";")
+        lon.append(float(lo))
+        lat.append(float(la))
+        lang.append(r.lang)
+    b = cfg.N_side**2
+    n_tiles = 6 * b**tile_res
+    base_p = cfg.num_cells(0, tile_res - 1) if tile_res > 0 else 0
+    idx = KC.encode_index(cfg, np.array(lon, dtype=np.float64),
+                          np.array(lat, dtype=np.float64), resolution)
+    assert (idx >= 0).all()
+    tile = (idx - cfg.num_cells(0, resolution - 1)) // b ** (resolution - tile_res)
+    n_pages = np.bincount(tile, minlength=n_tiles)
+    langs = [set() for _ in range(n_tiles)]
+    for t, g in zip(tile, lang):
+        langs[t].add(g)
+    face, digits = KC.suid_from_level_order_index(
+        cfg, np.arange(n_tiles, dtype=np.int64) + base_p, tile_res
+    )
+    return {
+        str(s): (int(n), len(g))
+        for s, n, g in zip(KC.suid_strings(face, digits), n_pages, langs)
+    }
+
+
+class TestGridRollupOracle:
+    @pytest.mark.parametrize("n_rows", [0, 50, 3000])
+    @pytest.mark.parametrize("tile_res", [0, 1, 2])
+    def test_rollup_matches_numpy(self, spark, n_rows, tile_res):
+        """full_grid_rollup equals the off-Spark expectation on every
+        tile, empty tiles as (0, 0); pages_per_tile (plain and salted)
+        equals it on the non-empty tiles."""
+        pages = synthesize_pages(spark, n_rows, partitions=2).cache()
+        want = _expected_rollup(pages, 9, tile_res)
+        got = {
+            r.tile_id: (r.n_pages, r.n_langs)
+            for r in full_grid_rollup(spark, pages, 9, tile_res).collect()
+        }
+        assert len(got) == 6 * 9**tile_res
+        assert got == want
+        empty = [t for t, (n, _) in want.items() if n == 0]
+        assert all(got[t] == (0, 0) for t in empty)
+        nonempty = {t: v for t, v in want.items() if v[0] > 0}
+        for n_salt in (0, 4):
+            per_tile = pages_per_tile(pages, 9, tile_res, n_salt=n_salt)
+            assert {
+                r.tile_id: (r.n_pages, r.n_langs) for r in per_tile.collect()
+            } == nonempty
+        pages.unpersist()
+
+
 class TestSnapshots:
     def test_snapshot_write_read(self, spark, pages, tmp_path):
         t = SnapshotTable(str(tmp_path / "tbl"))

@@ -309,6 +309,48 @@ class TestDistributedCoverPlans:
         assert "substring" not in plan.lower()
 
 
+class TestGridRollupPlan:
+    def test_full_grid_rollup_is_one_aggregation(self, spark):
+        """The empty tiles come from a union with the grid's indices,
+        not a join: one shuffle, one encode pass, no broadcast."""
+        from rhealpixdggs_spark.pipeline import full_grid_rollup
+        from rhealpixdggs_spark.sources.pages import synthesize_pages
+
+        pages = synthesize_pages(spark, 500, partitions=2)
+        plan = _plan(full_grid_rollup(spark, pages, 9, 2))
+        assert "Join" not in plan
+        assert "BroadcastExchange" not in plan
+        assert plan.count("Exchange") == 1
+        assert plan.count("ArrowEvalPython") == 1
+
+    def test_full_grid_rollup_build_cost(self, spark, monkeypatch):
+        """Building the rollup DataFrame takes at most 300 driver->JVM
+        calls (the minimum over 3 warm builds): its builders are SQL
+        strings, where Column calls cost several round trips each."""
+        from py4j.clientserver import ClientServerConnection
+
+        from rhealpixdggs_spark.pipeline import full_grid_rollup
+        from rhealpixdggs_spark.sources.pages import synthesize_pages
+
+        pages = synthesize_pages(spark, 500, partitions=2)
+        full_grid_rollup(spark, pages, 9, 2)  # warm-up
+        calls = [0]
+        send = ClientServerConnection.send_command
+
+        def counting(self, command, *args, **kwargs):
+            calls[0] += 1
+            return send(self, command, *args, **kwargs)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        counts = []
+        for _ in range(3):
+            calls[0] = 0
+            full_grid_rollup(spark, pages, 9, 2)
+            counts.append(calls[0])
+        print(f"full_grid_rollup build py4j calls: {counts}")
+        assert 0 < min(counts) <= 300, counts
+
+
 class TestGridScale:
     def test_res6_grid_generates_distributed(self, spark):
         """3.19M cells from spark.range + the index codec — no driver

@@ -172,7 +172,7 @@ def test_index_to_suid_column_math_matches_kernel(spark, n_side):
 
     df = spark.createDataFrame(pd.DataFrame({"res": res_a, "idx": idx_a}))
     suid = F.coalesce(*[
-        F.when(F.col("res") == r, rhp_index_to_suid(F.col("idx"), r, cfg))
+        F.when(F.col("res") == r, rhp_index_to_suid("idx", r, cfg))
         for r in range(16)
     ])
     out = df.select("idx", suid.alias("s"))
@@ -184,7 +184,7 @@ def test_index_to_suid_column_math_matches_kernel(spark, n_side):
     lo3 = cfg.num_cells(0, 2)
     odd = spark.createDataFrame(
         [(None,), (lo3 - 1,), (lo3 + 6 * b**3,)], "idx long"
-    ).select(rhp_index_to_suid(F.col("idx"), 3, cfg).alias("s"))
+    ).select(rhp_index_to_suid("idx", 3, cfg).alias("s"))
     assert [r.s for r in odd.collect()] == [None, None, None]
 
 
@@ -194,4 +194,4 @@ def test_index_to_suid_rejects_multi_digit_bases():
     from rhealpixdggs_spark.kernel.constants import DggsConfig
 
     with pytest.raises(ValueError, match="N_side"):
-        rhp_index_to_suid(F.col("idx"), 3, DggsConfig(N_side=4))
+        rhp_index_to_suid("idx", 3, DggsConfig(N_side=4))

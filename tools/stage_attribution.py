@@ -11,7 +11,8 @@ is attributed to a phase instead of guessed:
   scan        — parquet scan + count (no Python)
   encode      — scan + Arrow res-9 encode, map-only noop write
   rollup      — encode + groupBy(res-2 key) agg (the one Exchange)
-  full        — rollup + broadcast grid join + noop write
+  full        — points_grid_rollup (rollup unioned with the grid's
+                tile rows, one aggregation) + noop write
 
 Knob sweeps on the rollup phase (the Exchange): shuffle partitions
 {64, 256}, shuffle codec {lz4, zstd}, Arrow batch {10k (default),
@@ -79,7 +80,7 @@ def run_phase(master: str, phase: str, shuffle_partitions: int,
                     rhp_encode_index(F.col("lon"), F.col("lat"), 9).alias("i")
                 )
                 enc.groupBy(
-                    rhp_index_parent(F.col("i"), 9, 2).alias("t")
+                    rhp_index_parent("i", 9, 2).alias("t")
                 ).count().write.format("noop").mode("overwrite").save()
             else:  # full
                 points_grid_rollup(
