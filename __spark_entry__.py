@@ -1508,8 +1508,9 @@ def _q_polygon_join_df(spark, sf_dir):
     """DataFrame-NATIVE point-in-polygon join: the fleet arrives as a
     vertex TABLE (zone, part, ring, vtx, lon, lat), candidates are the
     packed-int64 bbox cover (shared fleet_candidate_idx), the refine
-    is the relational even-odd — nothing about the fleet on the driver
-    (operators/joins.polygon_join_df, r5). Oracle: the same
+    folds each candidate zone's ring table inline (even_odd_refine),
+    with no join back to the points — nothing about the fleet on the
+    driver (operators/joins.polygon_join_df, r5). Oracle: the same
     independent half-plane algebra as polygon_join."""
     from rhealpixdggs_spark.operators.joins import polygon_join_df
     from rhealpixdggs_spark.operators.tiling import polygons_to_df
@@ -2315,12 +2316,12 @@ def _q_polyfill_eq_df(spark, sf_dir):
     """DataFrame-NATIVE polygon-fleet polyfill (round 5, VERDICT item
     2): the same equatorial polygon-with-hole as polyfill_eq, but the
     polygon arrives as a VERTEX TABLE (zone, part, ring, vtx, lon,
-    lat) and membership is the RELATIONAL even-odd — candidates
-    equi-join the edge table on zone, kernel-identical crossing
-    predicate, two-level parity aggregation — so a 10^6-polygon fleet
-    never touches the driver. Oracle: the identical independent
-    DuckDB re-derivation as polyfill_eq (candidate lattice + quad
-    centroid + even-odd SQL)."""
+    lat) and membership is the shared even-odd refine — candidates
+    equi-join the per-zone ring table on zone and one SQL fold over
+    its rings applies the kernel-identical crossing predicate — so a
+    10^6-polygon fleet never touches the driver. Oracle: the
+    identical independent DuckDB re-derivation as polyfill_eq
+    (candidate lattice + quad centroid + even-odd SQL)."""
     from rhealpixdggs_spark.operators.tiling import (
         polyfill_many_df,
         polygons_to_df,

@@ -694,23 +694,24 @@ def polygon_join_df(
          holding its points, so every point inside a polygon is
          guaranteed a candidate row;
       3. points encode ONCE to the same packed index
-         (rhp_encode_index) and equi-join the candidate table on the
-         8-byte key — at 100 TB the big side shuffles on int64 (or
-         AQE broadcasts a small fleet's cover), never on strings;
-      4. tiling.even_odd_membership refines on the point coords
-         against tiling.fleet_edges — the kernel's exact crossing
-         predicate as whole-stage-codegen column math, two-level
-         parity (ext-odd AND NOT hole-odd, OR over parts);
-      5. matches (point_id, zone) join back to the original rows, so
-         the output carries every input column plus `zone` (one row
-         per matching zone, like polygon_join).
+         (rhp_encode_index), keeping all their columns, and equi-join
+         the candidate table on the 8-byte key — at 100 TB the big
+         side shuffles on int64 (or AQE broadcasts a small fleet's
+         cover), never on strings;
+      4. tiling.even_odd_refine joins the per-zone ring table on zone
+         and keeps the rows one SQL fold over the zone's rings puts
+         inside — the kernel's exact crossing predicate per edge,
+         ext-odd AND NOT hole-odd per part, OR over parts. The rows
+         carry every input column, so nothing joins back: the output
+         is [point_id, the other input columns in order, zone], one
+         row per matching zone, like polygon_join.
 
-    `point_id` must be unique per input row (it keys the parity
-    aggregation). Skew note: step 4 shuffles candidate points on
-    `zone` — a single zone whose bbox dominates the point table is a
-    hot key; split such polygons into parts (the parity OR makes
-    part-splitting semantically free) or pre-filter with a finer
-    `res`.
+    `point_id` need not be unique. A `points` column named `zone`,
+    `_px`, `_py`, `_idx` or `_rings` raises ValueError. Skew note: a
+    ring table too big to broadcast makes step 4 shuffle on `zone`,
+    where a zone whose bbox dominates the point table is a hot key;
+    split such polygons into parts (the OR over parts makes this
+    semantically free) or pre-filter with a finer `res`.
 
     Dateline handling matches polygon_join: split_dateline=None
     auto-splits crossing rings, True forces, False raises inside the
@@ -719,13 +720,17 @@ def polygon_join_df(
     prefilter, so seam points cannot silently drop)."""
     from ..functions.udfs import rhp_encode_index
     from .tiling import (
-        even_odd_membership,
+        even_odd_refine,
         fleet_candidate_idx,
-        fleet_edges,
         resolve_fleet_vertices,
     )
 
-    # resolved feeds both the candidate spans and the even-odd edge
+    own = {"zone", "_px", "_py", "_idx", "_rings"}
+    clash = [c for c in points.columns if c.lower() in own]
+    if clash:
+        raise ValueError(f"polygon_join_df: rename points column(s) {clash}")
+
+    # resolved feeds both the candidate spans and the even-odd ring
     # table; persist() — lazily — so the collect_list + Arrow
     # dateline-split + explode runs once per action, not twice (same
     # as polyfill_many_df). Input-sized; MEMORY_AND_DISK spills.
@@ -737,19 +742,17 @@ def polygon_join_df(
     cand = fleet_candidate_idx(resolved, cfg, res).distinct()
 
     enc = points.select(
-        F.col(point_id),
+        "*",
         F.when(F.col(lon_col) == 180.0, F.lit(-180.0))
-        .otherwise(F.col(lon_col)).alias("px"),
-        F.col(lat_col).alias("py"),
+        .otherwise(F.col(lon_col)).alias("_px"),
+        F.col(lat_col).alias("_py"),
         rhp_encode_index(F.col(lon_col), F.col(lat_col), res, cfg)
         .alias("_idx"),
     )
-    cpts = enc.join(cand, "_idx").select(point_id, "px", "py", "zone")
-    matches = even_odd_membership(
-        cpts, fleet_edges(resolved), [point_id, "zone"],
-        x_col="px", y_col="py",
+    matches = even_odd_refine(enc.join(cand, "_idx"), resolved, "_px", "_py")
+    return matches.select(
+        point_id, *[c for c in points.columns if c != point_id], "zone"
     )
-    return points.join(matches, point_id)
 
 
 def containment_join_idx(

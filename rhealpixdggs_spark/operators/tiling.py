@@ -1266,7 +1266,9 @@ def resolve_fleet_vertices(
     one array per (zone, part) (a JVM partial-aggregation shuffle)
     and ONE Arrow-batched pandas_udf applies the exact kernel
     split_antimeridian per polygon, exploding back to vertex rows
-    with split parts re-keyed as part*64 + i. Shared by
+    with split parts re-keyed as part*64 + i. A part without a
+    ring 0 has no exterior, so it covers nothing and is dropped (its
+    holes are not renumbered into an exterior). Shared by
     polyfill_many_df and polygon_join_df; split_dateline semantics
     are the fleet-wide defaults (None detects, True forces, False
     raises inside the distributed stage)."""
@@ -1295,6 +1297,9 @@ def resolve_fleet_vertices(
     def _split(verts_s: pd.Series) -> pd.Series:
         out_all = []
         for verts in verts_s:
+            if verts[0]["ring"] != 0:  # no exterior: the part is empty
+                out_all.append([])
+                continue
             rings: list[list] = []
             cur_ring = None
             for v in verts:  # sorted by (ring, vtx) via sort_array
@@ -1371,66 +1376,55 @@ def fleet_candidate_idx(
     return _part_candidate_idx(heads, cfg, res)
 
 
-def fleet_edges(resolved: DataFrame) -> DataFrame:
-    """Edge table (zone, part, ring, x1, y1, x2, y2) of a resolved
-    vertex fleet via lead() + wrap-around closing edge. A duplicated
-    closing vertex only adds degenerate y1 == y2 edges, which the
-    even-odd crossing predicate ignores — kernel parity. Shared by
-    polyfill_many_df (centroid membership) and polygon_join_df
-    (point containment)."""
-    from pyspark.sql.window import Window
-
-    w_ring = Window.partitionBy("zone", "part", "ring").orderBy("vtx")
-    w_all = w_ring.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return resolved.select(
-        "zone", "part", "ring",
-        F.col("lon").alias("x1"), F.col("lat").alias("y1"),
-        F.coalesce(
-            F.lead("lon").over(w_ring), F.first("lon").over(w_all)
-        ).alias("x2"),
-        F.coalesce(
-            F.lead("lat").over(w_ring), F.first("lat").over(w_all)
-        ).alias("y2"),
-    )
-
-
-def even_odd_membership(
-    pts: DataFrame, edges: DataFrame, keys: list[str],
-    x_col: str = "cx", y_col: str = "cy",
+def even_odd_refine(
+    pts: DataFrame, resolved: DataFrame, x_col: str, y_col: str
 ) -> DataFrame:
-    """Relational even-odd point-in-polygon over a (point x zone)
-    candidate table: `pts` rows equi-join the edge table on zone,
-    each edge contributes the kernel's crossing predicate
+    """The (point x zone) candidate rows of `pts` whose point
+    (x_col, y_col) lies inside their zone, columns unchanged.
+
+    The ring table has one tiny row per zone (AQE broadcasts it): its
+    rings sorted by (part, ring), each a list of edges
+    (v[k], v[(k+1) % n]) in vtx order, closing edge included, minus
+    the y1 == y2 edges, which never cross the test ray. `pts`
+    equi-joins it on zone, and one SQL fold over the zone's rings
+    tests each edge with the kernel's crossing predicate
     ((y1 > y) != (y2 > y)) AND x < (x2-x1)*(y-y1)/(y2-y1)+x1
-    (kernel/regions.py:336-362, bit-identical arithmetic), and a
-    two-level parity aggregation applies ext-odd AND NOT hole-odd per
-    part, OR over multipolygon parts. Returns the distinct `keys`
-    rows that are inside. Everything stays JVM-side whole-stage
-    codegen."""
-    j = pts.join(edges, "zone")
-    yv, xv = F.col(y_col), F.col(x_col)
-    crosses = (F.col("y1") > yv) != (F.col("y2") > yv)
-    xin = (
-        (F.col("x2") - F.col("x1")) * (yv - F.col("y1"))
-        / (F.col("y2") - F.col("y1")) + F.col("x1")
+    (kernel/regions.py points_in_ring, same arithmetic; the division
+    only runs for a crossing edge). An exterior (ring 0) opens its
+    part with its parity, a hole can only clear the open part of its
+    own id, and a zone holds the point once any part does: ext-odd
+    AND NOT hole-odd per part, OR over parts. A part without a ring 0
+    matches nothing."""
+    per_ring = resolved.groupBy("zone", "part", "ring").agg(
+        F.sort_array(F.collect_list(F.struct("vtx", "lon", "lat")))
+        .alias("v")
     )
-    hit = crosses & (xv < xin)
-    per_ring = j.groupBy(*keys, "part", "ring").agg(
-        ((F.sum(hit.cast("long")) % 2) == 1).alias("odd")
+    rings = per_ring.groupBy("zone").agg(
+        F.sort_array(F.collect_list(F.expr(
+            "named_struct('part', part, 'ring', ring, 'edges', filter("
+            "zip_with(v, concat(slice(v, 2, size(v)), slice(v, 1, 1)), "
+            "(p, q) -> named_struct("
+            "'x1', p.lon, 'y1', p.lat, 'x2', q.lon, 'y2', q.lat)), "
+            "e -> e.y1 != e.y2))"
+        ))).alias("_rings")
     )
-    per_part = per_ring.groupBy(*keys, "part").agg(
-        F.max(F.when(F.col("ring") == 0, F.col("odd"))).alias("in_ext"),
-        F.coalesce(
-            F.max(F.when(F.col("ring") > 0, F.col("odd"))), F.lit(False)
-        ).alias("in_hole"),
+    x, y = f"`{x_col}`", f"`{y_col}`"
+    odd = (
+        "aggregate(r.edges, false, (o, e) -> o != ("
+        f"((e.y1 > {y}) != (e.y2 > {y})) AND "
+        f"{x} < (e.x2 - e.x1) * ({y} - e.y1) / (e.y2 - e.y1) + e.x1))"
     )
-    return (
-        per_part.where(F.col("in_ext") & ~F.col("in_hole"))
-        .select(*keys)
-        .distinct()
+    inside = (
+        "aggregate(_rings, named_struct('part', CAST(NULL AS BIGINT), "
+        "'inside', false, 'found', false), (a, r) -> CASE "
+        "WHEN a.found THEN a "
+        "WHEN r.ring = 0 THEN named_struct('part', r.part, "
+        f"'inside', {odd}, 'found', a.inside) "
+        f"WHEN a.inside AND a.part = r.part AND {odd} THEN "
+        "named_struct('part', a.part, 'inside', false, 'found', false) "
+        "ELSE a END, a -> a.found OR a.inside)"
     )
+    return pts.join(rings, "zone").where(inside).select(*pts.columns)
 
 
 def polyfill_many_df(
@@ -1464,14 +1458,12 @@ def polyfill_many_df(
          over the per-part rows; band row/column spans and cap ring
          runs are then pure column math, sequence-exploded exactly
          like polyfill_many (shared _part_candidate_idx helper).
-      3. membership replaces the driver-closure even-odd UDF with a
-         RELATIONAL even-odd: candidates equi-join the edge table on
-         zone, each edge contributes the kernel's crossing predicate
-         ((y1 > cy) != (y2 > cy)) AND cx < (x2-x1)*(cy-y1)/(y2-y1)+x1
-         (kernel/regions.py:336-362, bit-identical arithmetic), and a
-         two-level parity aggregation applies ext-odd AND NOT
-         hole-odd per part. Everything stays JVM-side whole-stage
-         codegen; the only Python is the geometry decode kernels.
+      3. membership replaces the driver-closure even-odd UDF with
+         even_odd_refine on the candidate centroids: an equi-join to
+         the per-zone ring table and one SQL fold over the zone's
+         rings (the kernel's exact crossing predicate per edge). It
+         stays JVM-side; the only Python is the geometry decode
+         kernels.
 
     split_dateline=None auto-splits crossing rings; True forces the
     split; False raises (inside the distributed resolve stage) if any
@@ -1481,11 +1473,11 @@ def polyfill_many_df(
     if partitions:
         polygons = polygons.repartition(partitions, "zone", "part")
 
-    # resolved feeds THREE consumers (candidate spans, the distinct-
-    # cell decode, and the even-odd edge table); persist() — lazily —
-    # so the collect_list + Arrow dateline-split + explode runs once
-    # per action, not three times. The vertex table is the operator's
-    # own input size; MEMORY_AND_DISK spills rather than OOMs.
+    # resolved feeds two consumers (candidate spans and the even-odd
+    # ring table); persist() — lazily — so the collect_list + Arrow
+    # dateline-split + explode runs once per action, not twice. The
+    # vertex table is the operator's own input size; MEMORY_AND_DISK
+    # spills rather than OOMs.
     from pyspark import StorageLevel
 
     resolved = resolve_fleet_vertices(
@@ -1523,13 +1515,9 @@ def polyfill_many_df(
     )
     cand = pairs.join(cells, "_idx").select("zone", "tile_id", "cx", "cy")
 
-    # Relational even-odd on the candidate CENTROIDS (shared helpers;
-    # the edge table's duplicated closing vertices only add degenerate
-    # y1==y2 edges, which the crossing predicate ignores — kernel
-    # parity).
-    inside = even_odd_membership(
-        cand, fleet_edges(resolved), ["zone", "tile_id"]
-    )
+    # `pairs` is distinct and each _idx decodes to one tile, so the
+    # refined rows are distinct too
+    inside = even_odd_refine(cand, resolved, "cx", "cy")
     return inside.select(
         "tile_id",
         (F.length("tile_id") - 1).cast("int").alias("res"),

@@ -581,8 +581,8 @@ class TestSemanticDedupPlan:
 class TestPolyfillManyDFPlan:
     def test_no_nested_loop_no_driver_fleet(self, spark):
         """polyfill_many_df (VERDICT r4 item 2): every join in the
-        DataFrame-native fleet plan is an equi-join — the relational
-        even-odd filter joins candidates to the edge table on zone —
+        DataFrame-native fleet plan is an equi-join — the even-odd
+        refine joins candidates to the per-zone ring table on zone —
         and the polygon table never materializes on the driver (no
         LocalTableScan of the fleet: the input here is a spark.range
         generator, as a production fleet would be a parquet scan)."""
@@ -682,8 +682,12 @@ class TestPolygonJoinDFPlan:
     def test_no_nested_loop_no_driver_fleet_int64_keys(self, spark):
         """polygon_join_df: candidate prefilter joins on the packed
         int64 cell index (8-byte shuffle keys, not suid strings), the
-        even-odd refine is an equi-join on zone, and the fleet never
-        materializes on the driver (spark.range generator input)."""
+        even-odd refine joins each candidate to its zone's ring table
+        on zone and folds the rings inline (no edge Window, no parity
+        aggregation keyed on the point id, no join back to the
+        points, so the points relation is scanned once), and the
+        fleet never materializes on the driver (spark.range generator
+        input)."""
         from pyspark.sql import functions as F
 
         from rhealpixdggs_spark.operators.joins import polygon_join_df
@@ -715,6 +719,9 @@ class TestPolygonJoinDFPlan:
         assert "LocalTableScan" not in plan
         # the prefilter join key is the packed int64 index column
         assert "_idx" in plan
+        assert "Window" not in plan
+        assert plan.count("Range (0, 500,") == 1
+        assert not re.search(r"Aggregate\(keys=\[[^\]]*\bpid#", plan)
         assert out.limit(1).count() >= 0
 
 

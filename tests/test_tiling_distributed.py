@@ -469,6 +469,182 @@ class TestPolygonJoinDF:
         assert got == exp and len(got) > 0
 
 
+    def test_output_contract(self, spark):
+        """Output columns are exactly [point_id, the other input
+        columns in input order, zone]; a point inside two zones gives
+        one row per zone; no helper column leaks; a points column
+        named like one of the join's own raises ValueError."""
+        from rhealpixdggs_spark.operators.joins import polygon_join_df
+        from rhealpixdggs_spark.operators.tiling import polygons_to_df
+
+        zones = {
+            "a": [([(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)], [])],
+            "b": [([(5.0, 5.0), (15.0, 5.0), (15.0, 15.0), (5.0, 15.0)], [])],
+        }
+        fleet = polygons_to_df(spark, zones)
+        pts = spark.createDataFrame(
+            [("p", 1.0, 7, 1.0), ("q", 7.0, 8, 7.0), ("r", 13.0, 9, 13.0),
+             ("s", 30.0, 10, 30.0)],
+            "name string, lat double, pid long, lon double",
+        )
+        out = polygon_join_df(pts, fleet, res=3)
+        assert out.columns == ["pid", "name", "lat", "lon", "zone"]
+        got = sorted(tuple(r) for r in out.collect())
+        assert got == [
+            (7, "p", 1.0, 1.0, "a"),
+            (8, "q", 7.0, 7.0, "a"),
+            (8, "q", 7.0, 7.0, "b"),
+            (9, "r", 13.0, 13.0, "b"),
+        ]
+        for name in ("_px", "_idx", "ZONE"):
+            with pytest.raises(ValueError, match=name):
+                polygon_join_df(
+                    pts.withColumn(name, F.lit(0)), fleet, res=3
+                )
+
+    def test_bad_coordinates_match_nothing(self, spark):
+        """NaN, +-inf and null coordinates and an out-of-range
+        latitude run without error; only the two valid points match
+        (the lon = 180 one in the dateline zone)."""
+        from rhealpixdggs_spark.operators.joins import polygon_join_df
+        from rhealpixdggs_spark.operators.tiling import polygons_to_df
+
+        zones = {
+            "a": [([(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)], [])],
+            "d": [([(170.0, -10.0), (-170.0, -10.0), (-170.0, 10.0),
+                    (170.0, 10.0)], [])],
+        }
+        nan, inf = float("nan"), float("inf")
+        pts = spark.createDataFrame(
+            [(1, nan, 5.0), (2, 5.0, nan), (3, inf, 5.0), (4, 5.0, -inf),
+             (5, 5.0, 5.0), (6, 180.0, 0.0), (7, None, 5.0), (8, 5.0, None),
+             (9, -inf, 5.0), (10, 5.0, 95.0)],
+            "pid int, lon double, lat double",
+        )
+        got = sorted(
+            (r.pid, r.zone)
+            for r in polygon_join_df(
+                pts, polygons_to_df(spark, zones), res=3
+            ).collect()
+        )
+        assert got == [(5, "a"), (6, "d")]
+
+
+class TestFleetRefineSemantics:
+    """polygon_join_df and polyfill_many_df against the kernel's
+    points_in_polygon OR-ed over each zone's parts (dateline parts
+    split by kernel split_antimeridian, +180 tested as -180 like the
+    encode prefilter): a hole of one part does not clear another
+    part, a part with holes but no exterior (ring 0) covers nothing,
+    and a dateline zone holds the +180 seam."""
+
+    @staticmethod
+    def _sq(x0, y0, x1, y1):
+        return [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+
+    def _rings(self):
+        # (zone, part, ring, coords): mp's part 1 lies inside part 0's
+        # hole; "ho" has a hole and no exterior; "dl" crosses the seam
+        return [
+            ("mp", 0, 0, self._sq(0.0, 0.0, 10.0, 10.0)),
+            ("mp", 0, 1, self._sq(2.0, 2.0, 8.0, 8.0)),
+            ("mp", 1, 0, self._sq(4.0, 4.0, 6.0, 6.0)),
+            ("ho", 0, 1, self._sq(20.0, 0.0, 30.0, 10.0)),
+            ("dl", 0, 0, [(170.0, -10.0), (-170.0, -10.0), (-170.0, 10.0),
+                          (170.0, 10.0)]),
+        ]
+
+    def _fleet(self, spark):
+        from rhealpixdggs_spark.operators.tiling import POLYGON_TABLE_SCHEMA
+
+        rows = [
+            (z, p, r, i, float(x), float(y))
+            for z, p, r, ring in self._rings()
+            for i, (x, y) in enumerate(ring)
+        ]
+        return spark.createDataFrame(rows, POLYGON_TABLE_SCHEMA)
+
+    def _kernel_zones(self, lon, lat):
+        """Zones holding each point by the kernel: [(zone, bool mask)]."""
+        import numpy as np
+
+        lon = np.where(lon == 180.0, -180.0, lon)
+        parts: dict = {}
+        for z, p, r, ring in self._rings():
+            parts.setdefault((z, p), {})[r] = ring
+        hit: dict = {}
+        for (z, _p), rings in parts.items():
+            mask = hit.setdefault(z, np.zeros(lon.shape, dtype=bool))
+            if 0 not in rings:
+                continue
+            polys = [(rings[0], [rings[r] for r in sorted(rings) if r])]
+            if KR.ring_crosses_dateline(rings[0]):
+                polys = KR.split_antimeridian(polys)
+            for ext, hs in polys:
+                mask |= KR.points_in_polygon(lon, lat, ext, hs)
+        return list(hit.items())
+
+    def test_polygon_join_df_matches_kernel(self, spark):
+        import numpy as np
+
+        from rhealpixdggs_spark.operators.joins import polygon_join_df
+
+        lon, lat = np.meshgrid(
+            np.concatenate([np.arange(-2.0, 32.0, 0.5),
+                            np.arange(160.0, 180.0, 0.5),
+                            np.arange(-180.0, -160.0, 0.5)]),
+            np.arange(-12.0, 12.0, 0.5),
+        )
+        lon = np.append(lon.ravel(), [180.0, 5.0, 3.0, 25.0])
+        lat = np.append(lat.ravel(), [0.25, 5.25, 3.25, 5.25])
+        pts = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+            "pid long, lon double, lat double",
+        )
+        exp = sorted(
+            (int(i), z)
+            for z, mask in self._kernel_zones(lon, lat)
+            for i in np.flatnonzero(mask)
+        )
+        got = sorted(
+            (r.pid, r.zone)
+            for r in polygon_join_df(pts, self._fleet(spark), res=3).collect()
+        )
+        assert got == exp
+        n = len(lon)
+        assert (n - 4, "dl") in got  # lon = +180 in the dateline zone
+        assert (n - 3, "mp") in got  # in part 0's hole, inside part 1
+        assert (n - 2, "mp") not in got  # in part 0's hole only
+        assert all(z != "ho" for _, z in got)  # no exterior, no match
+
+    def test_polyfill_many_df_matches_kernel(self, spark):
+        import numpy as np
+
+        from rhealpixdggs_spark.kernel import cells as KC
+        from rhealpixdggs_spark.operators.tiling import polyfill_many_df
+
+        cfg, res = WGS84_003, 4
+        lo = cfg.num_cells(0, res - 1)
+        idx = np.arange(lo, lo + 6 * cfg.N_side ** (2 * res), dtype=np.int64)
+        face, digits = KC.suid_from_level_order_index(cfg, idx, res)
+        cx, cy = KC.centroid(cfg, face, digits, plane=False)
+        cx, cy = np.asarray(cx, dtype=np.float64), np.asarray(cy, dtype=np.float64)
+        suids = KC.suid_strings(face, digits)
+        exp = sorted(
+            (z, str(suids[i]))
+            for z, mask in self._kernel_zones(cx, cy)
+            for i in np.flatnonzero(mask)
+        )
+        got = sorted(
+            (r.zone, r.tile_id)
+            for r in polyfill_many_df(spark, self._fleet(spark), res).collect()
+        )
+        assert got == exp
+        inner = KR.points_in_polygon(cx, cy, self._sq(4.0, 4.0, 6.0, 6.0))
+        assert inner.any()  # part 1's tiles lie in part 0's hole
+        assert {z for z, _ in got} == {"mp", "dl"}
+
+
 class TestZoneTilesManyDF:
     """zone_tiles_many_df: the DataFrame-native lock-step zone
     rasterizer must match zone_tiles_many / the per-zone kernel
