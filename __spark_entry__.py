@@ -1489,10 +1489,11 @@ def _q_pip_polygon(spark, sf_dir):
 
 
 def _q_polygon_join(spark, sf_dir):
-    """Point-in-polygon spatial join against a polygon table: bbox
-    cell-cover prefilter (broadcast) + one vectorized even-odd refine
-    pass (operators/joins.polygon_join). Oracle: independent half-plane
-    algebra per convex zone."""
+    """Point-in-polygon spatial join against a polygon list
+    (operators/joins.polygon_join): an adapter that flattens the list
+    to a vertex table and runs polygon_join_df's plan — packed-int64
+    candidate cells, then the even_odd_refine fold over each zone's
+    rings. Oracle: independent half-plane algebra per convex zone."""
     from rhealpixdggs_spark.operators.joins import polygon_join
 
     pts = _points(spark, sf_dir)

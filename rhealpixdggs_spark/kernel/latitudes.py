@@ -23,7 +23,10 @@ def wrap_longitude(lam: np.ndarray, radians: bool = False) -> np.ndarray:
     out = lam.copy()
     bad = (lam < -half) | (lam >= half)
     if np.any(bad):
-        r = np.mod(lam[bad], 2 * half)
+        # +-inf is "bad" and np.mod maps it to NaN (the encode's null);
+        # invalid= silences the warning, not the value
+        with np.errstate(invalid="ignore"):
+            r = np.mod(lam[bad], 2 * half)
         r = np.where(r >= half, r - 2 * half, r)
         out[bad] = r
     return out

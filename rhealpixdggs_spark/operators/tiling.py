@@ -8,11 +8,24 @@ embarrassingly parallel — no successor chain, no driver loop.
 
 Region covers and polyfill are distributed by default
 (region_cover_df / region_cover_ell_df / polyfill_df): candidates come
-from closed-form row/column spans, geometry decode is one Arrow pass,
-containment is pure column math — a continent-scale res-9 cover never
-touches the driver. polyfill_tiles remains as the driver-side NumPy
-fast path for a handful of small polygons whose result should land in
-a broadcastable local DataFrame."""
+from closed-form row/column spans, geometry decode is one Arrow pass —
+a continent-scale res-9 cover never touches the driver.
+polyfill_tiles remains as the driver-side NumPy fast path for a
+handful of small polygons whose result should land in a
+broadcastable local DataFrame.
+
+The vertex-table operators zone_tiles_many_df and
+joins.polygon_join_df dateline-resolve the table, then hand it to a
+private core (_zone_tiles_core, joins._polygon_join_core). The
+dict/list-input zone_tiles_many and joins.polygon_join are adapters:
+they resolve the dateline on the driver, flatten the input with
+polygons_to_df and call the same core. polyfill_many keeps its own
+driver-side candidate rows and Arrow even-odd, because the adapter
+over polyfill_many_df measured slower on bench.py's band-only fleet.
+Otherwise even_odd_refine (a SQL fold over each zone's rings) is the
+Spark-side even-odd; polyfill_df's per-part centroid filter uses it,
+in either frame. The kernel's points_in_polygon stays as the oracle
+the tests compare against."""
 
 from __future__ import annotations
 
@@ -211,35 +224,6 @@ def linetrace_df(
         *[c for c in lines.columns if c != line_col],
         F.posexplode("_cells").alias("seq", "cell_id"),
     )
-
-
-def _in_ring_col(px, py, ring):
-    """Even-odd ray-crossing containment against a CONSTANT ring as a
-    pure column expression (JVM twin of kernel points_in_ring,
-    regions.py:321-337): one xor'd crossing term per non-horizontal
-    edge, whole-stage codegen, no UDF."""
-    ring = [tuple(map(float, p)) for p in ring]
-    if ring[0] == ring[-1]:
-        ring = ring[:-1]
-    inside = F.lit(False)
-    n = len(ring)
-    for i in range(n):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % n]
-        if y1 == y2:
-            continue  # horizontal edge never crosses the test ray
-        crosses = (F.lit(y1) > py) != (F.lit(y2) > py)
-        xin = F.lit(x2 - x1) * (py - F.lit(y1)) / F.lit(y2 - y1) + F.lit(x1)
-        inside = inside != (crosses & (px < xin))
-    return inside
-
-
-def points_in_polygon_col(px, py, exterior, holes=()):
-    """Column twin of kernel points_in_polygon (exterior minus holes)."""
-    inside = _in_ring_col(px, py, exterior)
-    for h in holes:
-        inside = inside & ~_in_ring_col(px, py, h)
-    return inside
 
 
 def region_cover_ell_df(
@@ -442,12 +426,14 @@ def polyfill_df(
     split_dateline: bool | None = None,
 ) -> DataFrame:
     """Distributed polyfill (rhp_wrappers.py:510-599 semantics, same
-    result set as kernel polyfill): per polygon, candidates come from
-    the DISTRIBUTED bbox cover (region_cover_ell_df / region_cover_df),
-    the centroid decode is one Arrow pass (rhp_centroid), and the
-    even-odd containment filter is a pure column expression
-    (points_in_polygon_col) — no driver-side cell list at any point.
-    Output: (tile_id, res, zone).
+    result set as kernel polyfill): per polygon part, candidates are
+    its DISTRIBUTED bbox cover (region_cover_ell_df, or
+    region_cover_df for plane=True), the centroid decode is one Arrow
+    pass (rhp_centroid), and membership is even_odd_refine against
+    the part's vertex table (polygons_to_df); a zone is the union of
+    its parts' cells — no driver-side cell list at any point. The
+    refine reads any x/y frame, so plane=True tests planar centroids
+    against planar rings. Output: (tile_id, res, zone).
 
     Dateline handling (the reference's own bbox assumption is its
     documented antimeridian TODO, rhp_wrappers.py:510-599): crossing
@@ -464,8 +450,10 @@ def polyfill_df(
             polys = _resolve_split_dateline(
                 polys, split_dateline, cfg, f"polyfill_df[{name}]"
             )
-        cand = None
-        for exterior, holes in polys:
+        # each part refines only its own bbox cover, as in the kernel:
+        # the refine's zone key is the part's position in `polys`
+        cells = None
+        for k, (exterior, _holes) in enumerate(polys):
             ext = np.asarray(exterior, dtype=np.float64)
             nw = (float(ext[:, 0].min()), float(ext[:, 1].max()))
             se = (float(ext[:, 0].max()), float(ext[:, 1].min()))
@@ -473,27 +461,32 @@ def polyfill_df(
                 cover = region_cover_df(spark, res, nw, se, cfg)
             else:
                 cover = region_cover_ell_df(spark, res, nw, se, cfg)
-            # explicit round-robin fan-out: the distinct() output is
-            # small in BYTES, so AQE would coalesce it onto one task —
-            # but the centroid decode downstream is Python COMPUTE (GL
-            # integrals for dart/skew cells); see polyfill_many's note
-            cells = cover.select("cell_id").distinct().repartition(
-                spark.sparkContext.defaultParallelism
-            )
-            # centroid struct fields are (lon, lat); in plane mode they
-            # carry (x, y) — either way the polygon is in the same frame.
-            c = rhp_centroid(F.col("cell_id"), cfg, plane=plane)
-            keep = cells.select("cell_id", c.alias("_c")).where(
-                points_in_polygon_col(
-                    F.col("_c")["lon"], F.col("_c")["lat"], exterior, holes
-                )
-            ).select("cell_id")
-            cand = keep if cand is None else cand.unionByName(keep)
-        cand = cand.distinct()
+            cover = cover.select(F.lit(str(k)).alias("zone"), "cell_id")
+            cells = cover if cells is None else cells.unionByName(cover)
+        # explicit round-robin fan-out: the distinct() output is
+        # small in BYTES, so AQE would coalesce it onto one task —
+        # but the centroid decode downstream is Python COMPUTE (GL
+        # integrals for dart/skew cells); see polyfill_many's note
+        cells = cells.distinct().repartition(
+            spark.sparkContext.defaultParallelism
+        )
+        # centroid struct fields are (lon, lat); in plane mode they
+        # carry (x, y) — either way the polygon is in the same frame.
+        cand = cells.withColumn(
+            "_c", rhp_centroid(F.col("cell_id"), cfg, plane=plane)
+        ).select(
+            "zone", "cell_id",
+            F.col("_c")["lon"].alias("cx"), F.col("_c")["lat"].alias("cy"),
+        )
+        parts = polygons_to_df(
+            spark, {str(k): [part] for k, part in enumerate(polys)}
+        )
+        keep = even_odd_refine(cand, parts, "cx", "cy")
+        keep = keep.select("cell_id").distinct()
         if compress:
-            cand = compress_cells_df(cand, cfg=cfg)
+            keep = compress_cells_df(keep, cfg=cfg)
         zones.append(
-            cand.select(
+            keep.select(
                 F.col("cell_id").alias("tile_id"),
                 (F.length("cell_id") - 1).cast("int").alias("res"),
                 F.lit(name).alias("zone"),
@@ -675,113 +668,26 @@ def zone_tiles_many(
     checkpoint: bool = True,
     split_dateline: bool | None = None,
 ) -> DataFrame:
-    """Lock-step distributed CellZoneFromPoly for MANY named zones:
-    one (zone, cell_id) frontier advances all zones together, so a
-    fleet of 10k polygons rasterizes in <= res_limit+1 Spark jobs
-    TOTAL (zone_tiles would launch a per-level job sequence per zone
-    and union 10k plans). Per level the classify pass groups the Arrow
-    batch by (zone, resolution) and runs the vectorized kernel once
-    per group; zones whose perimeter is fully classified simply drop
-    out of the frontier. Roots may sit at different depths (each
-    zone's finest bounding cell), so the frontier legitimately mixes
-    resolutions — the at-limit emit test is per-row column math.
-
-    The geometry table ships in the UDF closure: fine for ~10^4
-    modest polygons (the classify kernel is O(cells x vertices) per
-    zone); beyond that, shard the dict across calls. Output:
+    """Lock-step distributed CellZoneFromPoly for MANY named zones,
+    from a polygon dict: an adapter over zone_tiles_many_df's plan.
+    The parts are dateline-resolved on the driver (so
+    split_dateline=False raises eagerly), flattened to the vertex
+    table (polygons_to_df) and rasterized by the same lock-step
+    frontier, so a fleet of 10k polygons takes <= res_limit+1 Spark
+    jobs TOTAL (zone_tiles would launch a per-level job sequence per
+    zone and union 10k plans). `polygons` maps zone name ->
+    [(exterior_ring, holes), ...]; crossing rings are auto-split per
+    zone by default (None), True forces the split. Output:
     (tile_id, res, zone), same cell sets as zone_from_poly_df per
     zone."""
-    from ..kernel import zones as KZ
-    from ..kernel.constants import CELLS0
-
     polygons = {
         name: _resolve_split_dateline(
             polys, split_dateline, cfg, f"zone_tiles_many[{name}]"
         )
         for name, polys in polygons.items()
     }
-    geoms = {name: KZ._Geometry(polys) for name, polys in polygons.items()}
-    emit_rows: list[tuple[str, str]] = []
-    frontier_rows: list[tuple[str, str]] = []
-    for name, polys in polygons.items():
-        geom = geoms[name]
-        bc = KZ.get_finest_containing_cell(cfg, polys)
-        roots = [bc] if bc is not None else list(CELLS0)
-        for root in roots:
-            ring = KZ._cell_ring_ellipsoidal(cfg, root)
-            if len(roots) > 1 and not (
-                geom.overlaps_ring(ring) or geom.contains_ring(ring)
-            ):
-                continue
-            if geom.contains_ring(ring):
-                emit_rows.append((name, root))
-            elif len(root) <= res_limit:
-                frontier_rows.append((name, root))
-
-    schema = "zone string, cell_id string"
-    parts: list[DataFrame] = []
-    if emit_rows:
-        parts.append(spark.createDataFrame(emit_rows, schema))
-
-    @pandas_udf("contains boolean, overlaps boolean, nucleus_in boolean")
-    def _classify(zone: pd.Series, cell: pd.Series) -> pd.DataFrame:
-        n = len(cell)
-        c = np.zeros(n, dtype=bool)
-        o = np.zeros(n, dtype=bool)
-        nu = np.zeros(n, dtype=bool)
-        z = zone.to_numpy(dtype=object)
-        s = cell.to_numpy(dtype=object)
-        lens = np.array([len(x) for x in s])
-        for zname in pd.unique(zone):
-            zm = z == zname
-            for L in np.unique(lens[zm]):
-                m = zm & (lens == L)
-                cc, oo, nn = KZ.classify_batch(
-                    cfg, s[m].astype(str), geoms[zname]
-                )
-                c[m], o[m], nu[m] = cc, oo, nn
-        return pd.DataFrame(
-            {"contains": c, "overlaps": o, "nucleus_in": nu},
-            index=cell.index,
-        )
-
-    digits = [str(i) for i in range(cfg.N_side**2)]
-    frontier = (
-        spark.createDataFrame(frontier_rows, schema) if frontier_rows else None
-    )
-    for _level in range(res_limit):
-        if frontier is None:
-            break
-        children = frontier.select(
-            "zone",
-            F.explode(
-                F.array(*[F.concat(F.col("cell_id"), F.lit(d)) for d in digits])
-            ).alias("cell_id"),
-        )
-        cls = children.withColumn(
-            "_c",
-            _classify.asNondeterministic()(F.col("zone"), F.col("cell_id")),
-        )
-        if checkpoint:
-            cls = cls.localCheckpoint(eager=True)
-        at_limit = (F.length("cell_id") - 1) == res_limit
-        parts.append(
-            cls.where(
-                F.col("_c.contains") | (at_limit & F.col("_c.nucleus_in"))
-            ).select("zone", "cell_id")
-        )
-        frontier = cls.where(
-            ~F.col("_c.contains") & ~at_limit & F.col("_c.overlaps")
-        ).select("zone", "cell_id")
-        if frontier.isEmpty():
-            frontier = None
-    out = parts[0] if parts else spark.createDataFrame([], schema)
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        F.col("cell_id").alias("tile_id"),
-        (F.length("cell_id") - 1).cast("int").alias("res"),
-        "zone",
+    return _zone_tiles_core(
+        spark, polygons_to_df(spark, polygons), res_limit, cfg, checkpoint
     )
 
 
@@ -811,32 +717,48 @@ def zone_tiles_many_df(
     checkpoint: bool = True,
     split_dateline: bool | None = None,
 ) -> DataFrame:
-    """DataFrame-NATIVE lock-step CellZoneFromPoly: same semantics as
-    zone_tiles_many (one mixed-resolution frontier advances ALL zones
-    together, <= res_limit+1 jobs total) but the fleet arrives as a
-    VERTEX TABLE (zone, part, ring, vtx, lon, lat) and NOTHING about
-    it ever lives on the driver: the geometry reaches the classify
-    pass through an equi-join on zone instead of a pickled dict
-    closure, and the per-zone root search (finest bounding cell +
-    res-0 seeding) runs executor-side in one Arrow pass over the
-    per-zone rows. A 10^6-zone fleet is just a bigger input table.
+    """DataFrame-NATIVE lock-step CellZoneFromPoly: one
+    mixed-resolution frontier advances ALL zones together (<=
+    res_limit+1 jobs total), and the fleet arrives as a VERTEX TABLE
+    (zone, part, ring, vtx, lon, lat), so NOTHING about it ever lives
+    on the driver: the geometry reaches the classify pass through an
+    equi-join on zone instead of a pickled dict closure, and the
+    per-zone root search (finest bounding cell + res-0 seeding) runs
+    executor-side in one Arrow pass over the per-zone rows. A
+    10^6-zone fleet is just a bigger input table. zone_tiles_many is
+    an adapter over the same plan from the resolved vertex table on.
 
     Per-level plan: frontier children (a column explode) equi-join
     the localCheckpoint'ed per-zone geometry table on zone, and ONE
     pandas UDF classifies the batch — geometry is rebuilt once per
     DISTINCT zone per batch (the join hash-partitions by zone, so
-    batches hold few zones and the rebuild amortizes). Trade-off vs
-    the dict path: each frontier row carries its zone's vertex array
-    through the join (fine for parcel/admin-scale rings; a
-    10^6-vertex coastline duplicates per cell — shard such zones into
-    parts first). Output: (tile_id, res, zone), same cell sets as
-    zone_tiles_many / zone_from_poly_df per zone."""
-    from ..kernel import zones as KZ
-    from ..kernel.constants import CELLS0
-
+    batches hold few zones and the rebuild amortizes). Each frontier
+    row carries its zone's vertex array through the join (fine for
+    parcel/admin-scale rings; a 10^6-vertex coastline duplicates per
+    cell — shard such zones into parts first). Roots may sit at
+    different depths (each zone's finest bounding cell), so the
+    at-limit emit test is per-row column math. Output:
+    (tile_id, res, zone), same cell sets as zone_from_poly_df per
+    zone."""
     resolved = resolve_fleet_vertices(
         polygons, cfg, split_dateline, "zone_tiles_many_df"
     )
+    return _zone_tiles_core(spark, resolved, res_limit, cfg, checkpoint)
+
+
+def _zone_tiles_core(
+    spark: SparkSession,
+    resolved: DataFrame,
+    res_limit: int,
+    cfg: DggsConfig,
+    checkpoint: bool,
+) -> DataFrame:
+    """zone_tiles_many_df from a dateline-RESOLVED vertex table on:
+    the per-zone geometry table, the root search and the lock-step
+    frontier."""
+    from ..kernel import zones as KZ
+    from ..kernel.constants import CELLS0
+
     # explicit round-robin fan-out: the per-zone geometry table is tiny
     # in BYTES, so AQE's byte-based coalescing would serialize the
     # compute-dense _roots / _classify Arrow passes onto one task (the
@@ -1240,10 +1162,11 @@ POLYGON_TABLE_SCHEMA = (
 
 
 def polygons_to_df(spark: SparkSession, polygons: dict[str, list]) -> DataFrame:
-    """Flatten a polyfill_many polygon dict into the vertex-table
-    shape polyfill_many_df consumes: one row per vertex, ring 0 the
-    exterior, rings >= 1 the holes, vertices ordered by vtx. A test
-    and migration helper — production fleets should build the vertex
+    """Flatten a polygon dict (zone -> [(exterior, holes), ...]) into
+    the vertex table the fleet operators consume: one row per vertex,
+    ring 0 the exterior, rings >= 1 the holes, vertices ordered by
+    vtx. The dict-input operators (zone_tiles_many, polygon_join,
+    polyfill_df's refine) run on its output as a local relation; fleets too big for the driver should build the vertex
     table distributedly (parquet scan, spark.range generator, ...)."""
     rows = []
     for zone, polys in polygons.items():
@@ -1344,8 +1267,7 @@ def fleet_candidate_idx(
     per-part exterior bbox stats are a JVM aggregation, the HEALPix y
     of the lat extremes is one tiny Arrow pass over the per-part
     rows, and band spans plus polar-cap ring runs are then column
-    math from those same rows (_part_candidate_idx, shared with
-    polyfill_many; each part's own longitude wedge, padded by 4x the
+    math from those same rows (_part_candidate_idx; each part's own longitude wedge, padded by 4x the
     cell-to-nucleus longitude bound, drives its cap runs). The output
     is a SUPERSET of the cells holding a point of each part, so it
     prefilters both centroid membership (polyfill_many_df) and point

@@ -415,18 +415,19 @@ class TestPolygonJoinDFDateline:
 
 class TestZoneTilesManyDFDateline:
     def test_matches_dict_path_split(self, spark):
-        """zone_tiles_many_df must auto-split crossing rings exactly
-        like zone_tiles_many (resolve stage shared)."""
+        """zone_tiles_many_df must auto-split crossing rings: the same
+        cells as the kernel recursion over the kernel's split."""
+        from rhealpixdggs_spark.kernel import zones as KZ
         from rhealpixdggs_spark.operators.tiling import (
-            polygons_to_df, zone_tiles_many, zone_tiles_many_df,
+            polygons_to_df, zone_tiles_many_df,
         )
 
         zones = {"fiji": [(CROSSING_RAW, [])]}
         exp = sorted(
-            (r.zone, r.tile_id)
-            for r in zone_tiles_many(
-                spark, zones, res_limit=2, split_dateline=True
-            ).collect()
+            ("fiji", c)
+            for c in KZ.zone_from_poly(
+                WGS84_003, KR.split_antimeridian(zones["fiji"]), 2
+            )
         )
         got = sorted(
             (r.zone, r.tile_id)

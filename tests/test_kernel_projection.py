@@ -43,6 +43,24 @@ class TestGoldens:
         assert L.wrap_latitude(A([-135.0]))[0] == 45.0
         assert L.wrap_latitude(A([90.0]))[0] == 90.0
 
+    def test_nonfinite_wrap_and_encode_warn_nothing(self):
+        """inf, -inf and NaN wrap to NaN and encode to no cell (-1 /
+        None), without a RuntimeWarning from the wrap's np.mod."""
+        import warnings
+
+        from rhealpixdggs_spark.kernel import cells as KC
+
+        bad = A([np.inf, -np.inf, np.nan])
+        five = A([5.0, 5.0, 5.0])
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            assert np.isnan(L.wrap_longitude(bad)).all()
+            assert np.isnan(L.wrap_longitude(bad, radians=True)).all()
+            assert np.isnan(L.wrap_latitude(bad)).all()
+            for lon, lat in ((bad, five), (five, bad), (bad, bad)):
+                assert KC.encode_index(WGS84_003, lon, lat, 3).tolist() == [-1] * 3
+                assert KC.encode(WGS84_003, lon, lat, 3).tolist() == [None] * 3
+
     def test_healpix_sphere(self):
         x, y = H.healpix_sphere(A([0.0]), A([np.arcsin(2.0 / 3)]))
         assert (x[0], y[0]) == (0.0, np.pi / 4)

@@ -407,25 +407,42 @@ class TestCompressLineage:
 
 class TestPolygonJoinCover:
     def test_large_cover_generated_distributed(self, spark):
-        """Round-2 verdict item 6: above max_driver_cells the bbox
-        prefilter must come from the distributed cover (spark.range
-        column spans), not a driver-side kernel cell list — and both
-        paths must select the same rows."""
+        """Round-2 verdict item 6, at every bbox size: polygon_join never
+        builds a driver-side (zone, cell_id) cover table — its
+        candidates are fleet_candidate_idx's column spans, joined on
+        the packed int64 index — and its rows equal the kernel's
+        points_in_polygon brute force, for a small and a
+        continental-size triangle."""
+        import numpy as np
+
+        from rhealpixdggs_spark.kernel import regions as KR
         from rhealpixdggs_spark.operators.joins import polygon_join
 
-        pts = spark.createDataFrame(
-            [(i, -15.0 + i * 0.7, -8.0 + (i * 3) % 17) for i in range(80)],
-            ["pid", "lon", "lat"],
-        )
-        tri = [(-10.0, -10.0), (25.0, -12.0), (8.0, 20.0), (-10.0, -10.0)]
-        polys = [("tri", tri, [])]
-        small = polygon_join(pts, polys, res=3)
-        big = polygon_join(pts, polys, res=3, max_driver_cells=10)
-        assert sorted(map(tuple, small.collect())) == sorted(
-            map(tuple, big.collect())
-        )
-        plan = big._jdf.queryExecution().optimizedPlan().toString()
-        assert "Range (" in plan  # distributed column-span candidates
+        rows = [(i, -15.0 + i * 0.7, -8.0 + (i * 3) % 17) for i in range(80)]
+        pts = spark.createDataFrame(rows, ["pid", "lon", "lat"])
+        lon = np.array([r[1] for r in rows])
+        lat = np.array([r[2] for r in rows])
+        small = [(-10.0, -10.0), (25.0, -12.0), (8.0, 20.0), (-10.0, -10.0)]
+        big = [(-60.0, -50.0), (70.0, -55.0), (5.0, 65.0)]
+        for tri in (small, big):
+            out = polygon_join(pts, [("tri", tri, [])], res=3)
+            exp = sorted(
+                (rows[i][0], "tri")
+                for i in np.flatnonzero(KR.points_in_polygon(lon, lat, tri))
+            )
+            assert sorted((r.pid, r.zone) for r in out.collect()) == exp
+            assert exp
+            for name in ("optimizedPlan", "executedPlan"):
+                plan = getattr(out._jdf.queryExecution(), name)().toString()
+                # driver-built relations: the points and the vertex table
+                local = re.findall(
+                    r"(?:LocalRelation|LocalTableScan|LogicalRDD"
+                    r"|Scan ExistingRDD) ?\[([^\]]*)\]", plan
+                )
+                assert len(local) >= 2, plan
+                assert not any("cell_id" in cols for cols in local), local
+                assert "cell_id" not in plan
+                assert "_idx" in plan
 
 
 class TestBucketedJoins:

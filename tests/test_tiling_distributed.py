@@ -194,7 +194,9 @@ class TestZoneFromPolyDf:
 
 class TestPolyfillMany:
     def test_matches_polyfill_df_per_zone(self, spark):
-        from rhealpixdggs_spark.operators.tiling import polyfill_df, polyfill_many
+        """Per zone, polyfill_many equals the kernel polyfill (the
+        reference-gated oracle polyfill_df is checked against)."""
+        from rhealpixdggs_spark.operators.tiling import polyfill_many
 
         eq_hole = (
             [(-20.0, -10.0), (25.0, -15.0), (30.0, 20.0), (0.0, 30.0), (-20.0, -10.0)],
@@ -207,11 +209,9 @@ class TestPolyfillMany:
         for r in got.collect():
             by_zone.setdefault(r.zone, []).append(r.tile_id)
         for name in zones:
-            exp = sorted(
-                r.tile_id
-                for r in polyfill_df(spark, {name: zones[name]}, 3, plane=False).collect()
-            )
+            exp = sorted(KR.polyfill(WGS84_003, zones[name], 3, plane=False))
             assert sorted(by_zone.get(name, [])) == exp, name
+            assert exp, name
 
     def test_single_plan_no_per_polygon_union(self, spark):
         from rhealpixdggs_spark.operators.tiling import polyfill_many
@@ -322,8 +322,8 @@ class TestPolyfillMany:
 
 class TestPolyfillManyDF:
     """polyfill_many_df: the DataFrame-native polygon fleet (VERDICT
-    r4 item 2) must be result-identical to polyfill_many on the same
-    fixtures while keeping the fleet off the driver."""
+    r4 item 2) must equal the kernel polyfill per zone while keeping
+    the fleet off the driver."""
 
     ZONES = {
         "eq": [(
@@ -341,12 +341,13 @@ class TestPolyfillManyDF:
 
     def test_matches_polyfill_many(self, spark):
         from rhealpixdggs_spark.operators.tiling import (
-            polyfill_many, polyfill_many_df, polygons_to_df,
+            polyfill_many_df, polygons_to_df,
         )
 
         exp = {
-            (r.tile_id, r.res, r.zone)
-            for r in polyfill_many(spark, self.ZONES, 3).collect()
+            (c, len(c) - 1, name)
+            for name, polys in self.ZONES.items()
+            for c in KR.polyfill(WGS84_003, polys, 3, plane=False)
         }
         got = {
             (r.tile_id, r.res, r.zone)
@@ -361,14 +362,14 @@ class TestPolyfillManyDF:
         from py4j.protocol import Py4JJavaError
 
         from rhealpixdggs_spark.operators.tiling import (
-            polyfill_many, polyfill_many_df, polygons_to_df,
+            polyfill_many_df, polygons_to_df,
         )
 
         zones = {"x": [([(175.0, -5.0), (-175.0, -5.0), (180.0, 6.0)], [])]}
         pdf = polygons_to_df(spark, zones)
-        exp = sorted(
-            r.tile_id for r in polyfill_many(spark, zones, 3).collect()
-        )
+        exp = sorted(KR.polyfill(
+            WGS84_003, KR.split_antimeridian(zones["x"]), 3, plane=False
+        ))
         got = sorted(
             r.tile_id for r in polyfill_many_df(spark, pdf, 3).collect()
         )
@@ -382,9 +383,9 @@ class TestPolyfillManyDF:
 
     def test_multipart_zone_and_overlap_dedup(self, spark):
         """Two overlapping parts in one zone must dedupe to distinct
-        tiles, matching the dict path."""
+        tiles, matching the kernel polyfill's union over parts."""
         from rhealpixdggs_spark.operators.tiling import (
-            polyfill_many, polyfill_many_df, polygons_to_df,
+            polyfill_many_df, polygons_to_df,
         )
 
         zones = {"two": [
@@ -392,8 +393,8 @@ class TestPolyfillManyDF:
             ([(5.0, 5.0), (20.0, 5.0), (20.0, 20.0), (5.0, 20.0)], []),
         ]}
         exp = sorted(
-            (r.tile_id, r.zone)
-            for r in polyfill_many(spark, zones, 3).collect()
+            (c, "two")
+            for c in KR.polyfill(WGS84_003, zones["two"], 3, plane=False)
         )
         got = sorted(
             (r.tile_id, r.zone)
@@ -405,10 +406,10 @@ class TestPolyfillManyDF:
 
 
 class TestPolygonJoinDF:
-    """polygon_join_df: the DataFrame-native point-in-polygon join
-    must be result-identical to polygon_join on the same fixtures
-    (same bbox-cover prefilter semantics, exact even-odd refine,
-    holes, multipolygon OR) while keeping the fleet off the driver."""
+    """polygon_join_df and its list-input adapter polygon_join must
+    equal the kernel's points_in_polygon OR-ed over each zone's parts
+    (exact even-odd refine, holes, multipolygon OR) while keeping the
+    fleet off the driver."""
 
     ZONES = TestPolyfillManyDF.ZONES
 
@@ -426,6 +427,24 @@ class TestPolygonJoinDF:
         return [(z, ext, holes) for z, parts in zones.items()
                 for ext, holes in parts]
 
+    @staticmethod
+    def _kernel_pairs(pts, zones):
+        """(pid, zone) pairs by brute force: points_in_polygon over
+        every point, OR-ed over the zone's parts."""
+        import numpy as np
+
+        rows = pts.collect()
+        pid = np.array([r.pid for r in rows])
+        lon = np.array([r.lon for r in rows], dtype=np.float64)
+        lat = np.array([r.lat for r in rows], dtype=np.float64)
+        out = []
+        for z, parts in zones.items():
+            hit = np.zeros(len(rows), dtype=bool)
+            for ext, holes in parts:
+                hit |= KR.points_in_polygon(lon, lat, ext, holes)
+            out += [(int(i), z) for i in pid[hit]]
+        return sorted(out)
+
     def test_matches_polygon_join(self, spark):
         from rhealpixdggs_spark.operators.joins import (
             polygon_join, polygon_join_df,
@@ -433,12 +452,7 @@ class TestPolygonJoinDF:
         from rhealpixdggs_spark.operators.tiling import polygons_to_df
 
         pts = self._pts(spark)
-        exp = sorted(
-            (r.pid, r.zone)
-            for r in polygon_join(
-                pts, self._as_list(self.ZONES), res=2
-            ).collect()
-        )
+        exp = self._kernel_pairs(pts, self.ZONES)
         got = sorted(
             (r.pid, r.zone)
             for r in polygon_join_df(
@@ -446,6 +460,13 @@ class TestPolygonJoinDF:
             ).collect()
         )
         assert got == exp and len(got) > 0
+        got_list = sorted(
+            (r.pid, r.zone)
+            for r in polygon_join(
+                pts, self._as_list(self.ZONES), res=2
+            ).collect()
+        )
+        assert got_list == exp
 
     def test_multipart_zone_or_and_output_columns(self, spark):
         from rhealpixdggs_spark.operators.joins import (
@@ -461,12 +482,13 @@ class TestPolygonJoinDF:
         out = polygon_join_df(pts, polygons_to_df(spark, zones), res=2)
         # original columns preserved + zone; one row per (point, zone)
         assert set(out.columns) == {"pid", "lon", "lat", "zone"}
-        exp = sorted(
-            (r.pid, r.zone)
-            for r in polygon_join(pts, self._as_list(zones), res=2).collect()
-        )
+        exp = self._kernel_pairs(pts, zones)
         got = sorted((r.pid, r.zone) for r in out.collect())
         assert got == exp and len(got) > 0
+        # the list adapter keeps the points' own column order
+        out_list = polygon_join(pts, self._as_list(zones), res=2)
+        assert out_list.columns == ["pid", "lon", "lat", "zone"]
+        assert sorted((r.pid, r.zone) for r in out_list.collect()) == exp
 
 
     def test_output_contract(self, spark):
@@ -647,8 +669,8 @@ class TestFleetRefineSemantics:
 
 class TestZoneTilesManyDF:
     """zone_tiles_many_df: the DataFrame-native lock-step zone
-    rasterizer must match zone_tiles_many / the per-zone kernel
-    recursion on the same fixtures while keeping the fleet off the
+    rasterizer must match the per-zone kernel recursion on the same
+    fixtures while keeping the fleet off the
     driver (geometry reaches the classify pass via an equi-join on
     zone, roots are found executor-side)."""
 
@@ -680,8 +702,9 @@ class TestZoneTilesManyDF:
             assert sorted(by_zone.get(name, [])) == exp, name
 
     def test_hole_and_multipart(self, spark):
+        from rhealpixdggs_spark.kernel.zones import zone_from_poly
         from rhealpixdggs_spark.operators.tiling import (
-            polygons_to_df, zone_tiles_many, zone_tiles_many_df,
+            polygons_to_df, zone_tiles_many_df,
         )
 
         zones = {
@@ -697,8 +720,9 @@ class TestZoneTilesManyDF:
             ],
         }
         exp = sorted(
-            (r.tile_id, r.res, r.zone)
-            for r in zone_tiles_many(spark, zones, 4).collect()
+            (c, len(c) - 1, name)
+            for name, polys in zones.items()
+            for c in zone_from_poly(WGS84_003, polys, 4)
         )
         got = sorted(
             (r.tile_id, r.res, r.zone)
@@ -707,6 +731,51 @@ class TestZoneTilesManyDF:
             ).collect()
         )
         assert got == exp and len(got) > 0
+
+
+class TestAdapterLifecycle:
+    """The dict- and list-input operators persist nothing: an action
+    on polygon_join, polyfill_many or zone_tiles_many adds no RDD to
+    the session's storage (RDDs other tests left may be released
+    meanwhile, so only additions are checked).
+    zone_tiles_many runs with checkpoint=False here: with True its
+    per-level localCheckpoint blocks are the result's own lineage and
+    stay while the result is alive."""
+
+    ZONES = {
+        "a": [([(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)],
+               [[(2.0, 2.0), (4.0, 2.0), (3.0, 4.0)]])],
+        "b": [([(5.0, 5.0), (15.0, 5.0), (15.0, 15.0), (5.0, 15.0)], [])],
+    }
+
+    @staticmethod
+    def _stored(spark):
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return {i.id() for i in infos}
+
+    def test_adapters_leave_storage_at_baseline(self, spark):
+        from rhealpixdggs_spark.operators.joins import polygon_join
+        from rhealpixdggs_spark.operators.tiling import (
+            polyfill_many, zone_tiles_many,
+        )
+
+        pts = spark.range(200).select(
+            F.col("id").alias("pid"),
+            (F.col("id") % 20 * 1.0).alias("lon"),
+            (F.floor(F.col("id") / 20) * 1.5).alias("lat"),
+        )
+        polys = [(z, e, h) for z, parts in self.ZONES.items() for e, h in parts]
+        runs = {
+            "polygon_join": lambda: polygon_join(pts, polys, res=3),
+            "polyfill_many": lambda: polyfill_many(spark, self.ZONES, 3),
+            "zone_tiles_many": lambda: zone_tiles_many(
+                spark, self.ZONES, 3, checkpoint=False
+            ),
+        }
+        for name, run in runs.items():
+            before = self._stored(spark)
+            assert run().count() > 0, name
+            assert self._stored(spark) - before == set(), name
 
 
 class TestCapCandidates:

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Scale evidence for the DataFrame-native point-in-polygon join
-(round-5): join a fixed 1M-point table against 10k and 100k polygon
-fleets through polygon_join (driver-side list fleet: per-polygon bbox
-loop + pickled ring-lookup closure) and polygon_join_df (vertex-table
-fleet, spark.range-generated). The DF path's driver RSS must stay
-~flat as the fleet grows 10x, and the two paths must agree on the
-match count at every size.
+(round-5): join a fixed 1M-point table against 10k and 100k
+spark.range-generated vertex-table fleets through polygon_join_df and
+record wall time and the driver's RSS growth, which must stay ~flat
+as the fleet grows 10x. polygon_join (list input) is an adapter over
+the same plan, so it has no arm of its own; the committed
+BENCH/polygon_join_df_scale.json still holds the last list-vs-df
+comparison, run when polygon_join had its own driver-side plan.
 
 Writes BENCH/polygon_join_df_scale.json.
 """
@@ -31,25 +32,11 @@ def _rss_mb() -> float:
     return float("nan")
 
 
-def list_fleet(n: int) -> list:
-    # polygon_join's driver-side representation: O(n) vertex lists.
-    # Parcel-like fleet: small distinct triangles on a 0.5-degree
-    # pitch (660 lon slots x 90 lat slots), the realistic shape for
-    # a continental admin/parcel dataset.
-    return [
-        (f"z{i}", [
-            (-165.0 + (i % 660) * 0.5, -22.5 + (i // 660 % 90) * 0.5),
-            (-164.6 + (i % 660) * 0.5, -22.5 + (i // 660 % 90) * 0.5),
-            (-164.8 + (i % 660) * 0.5, -22.2 + (i // 660 % 90) * 0.5),
-        ], [])
-        for i in range(n)
-    ]
-
-
 def df_fleet(spark, n: int):
     from pyspark.sql import functions as F
 
-    # same parcel-like fleet as list_fleet, generated executor-side
+    # parcel-like fleet: small distinct triangles on a 0.5-degree
+    # pitch (660 lon slots x 90 lat slots), generated executor-side
     return spark.range(n).select(
         F.concat(F.lit("z"), F.col("id")).alias("zone"),
         F.lit(0).cast("int").alias("part"),
@@ -78,10 +65,7 @@ def points_table(spark):
 
 
 def main() -> None:
-    from rhealpixdggs_spark.operators.joins import (
-        polygon_join,
-        polygon_join_df,
-    )
+    from rhealpixdggs_spark.operators.joins import polygon_join_df
     from rhealpixdggs_spark.session import get_spark
 
     spark = get_spark(app_name="pjdf-scale", master="local[32]")
@@ -90,15 +74,12 @@ def main() -> None:
     pts.write.format("noop").mode("overwrite").save()  # warm generator
 
     out = {"res": RES, "n_points": N_POINTS, "runs": {}}
-    # warm both code paths once so imports/JIT don't count as growth
+    # warm the code path once so imports/JIT don't count as growth
     polygon_join_df(pts, df_fleet(spark, 1000), RES).write.format(
-        "noop").mode("overwrite").save()
-    polygon_join(pts, list_fleet(1000), RES).write.format(
         "noop").mode("overwrite").save()
 
     for variant, runner in [
         ("df", lambda n: polygon_join_df(pts, df_fleet(spark, n), RES)),
-        ("list", lambda n: polygon_join(pts, list_fleet(n), RES)),
     ]:
         for n in (10_000, 100_000):
             import gc
@@ -122,21 +103,13 @@ def main() -> None:
 
     d = out["runs"]
     out["summary"] = {
-        "match_counts_equal_10k":
-            d["df_10000"]["matches"] == d["list_10000"]["matches"],
-        "match_counts_equal_100k":
-            d["df_100000"]["matches"] == d["list_100000"]["matches"],
         "df_delta_10k_mb": d["df_10000"]["driver_rss_delta_mb"],
         "df_delta_100k_mb": d["df_100000"]["driver_rss_delta_mb"],
-        "list_delta_10k_mb": d["list_10000"]["driver_rss_delta_mb"],
-        "list_delta_100k_mb": d["list_100000"]["driver_rss_delta_mb"],
         "note": (
             "DF-native join: driver RSS delta must stay ~flat from "
             "10k to 100k polygons (the fleet is generated and "
             "consumed executor-side; candidates join on packed int64 "
-            "keys). The list fleet's delta grows with the fleet: the "
-            "polygon list, per-polygon bbox loop output and pickled "
-            "ring-lookup closure live on the driver."
+            "keys)."
         ),
     }
     path = os.path.join(

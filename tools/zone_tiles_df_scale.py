@@ -1,13 +1,13 @@
 #!/usr/bin/env python
 """Scale evidence for the DataFrame-native lock-step zone rasterizer
-(round-5): run zone_tiles_many (driver-side dict fleet) and
-zone_tiles_many_df (vertex-table fleet, spark.range-generated) at 1k
-and 10k zones and record wall time plus the driver python process's
-VmRSS growth for each. The dict path keeps every zone's vertex list
-on the driver and pickles a geometry lookup into the classify tasks;
-the DF path generates and consumes the fleet executor-side (geometry
-reaches the classify pass via an equi-join on zone), so its driver
-RSS must stay flat as the fleet grows 10x.
+(round-5): run zone_tiles_many_df on spark.range-generated
+vertex-table fleets of 1k and 10k zones and record wall time plus the
+driver python process's VmRSS growth, which must stay flat as the
+fleet grows 10x (geometry reaches the classify pass via an equi-join
+on zone). zone_tiles_many (dict input) is an adapter over the same
+plan, so it has no arm of its own; the committed
+BENCH/zone_tiles_df_scale.json still holds the last dict-vs-df
+comparison, run when zone_tiles_many had its own driver-side plan.
 
 Writes BENCH/zone_tiles_df_scale.json.
 """
@@ -33,18 +33,6 @@ def _rss_mb() -> float:
     return float("nan")
 
 
-def dict_fleet(n: int) -> dict:
-    # the driver-side representation zone_tiles_many consumes
-    return {
-        f"z{i}": [([
-            (-160.0 + (i % 50) * 6.0, -20.0 + (i % 7)),
-            (-154.0 + (i % 50) * 6.0, -22.0 + (i % 7)),
-            (-157.0 + (i % 50) * 6.0, 10.0 + (i % 7)),
-        ], [])]
-        for i in range(n)
-    }
-
-
 def df_fleet(spark, n: int):
     from pyspark.sql import functions as F
 
@@ -65,39 +53,20 @@ def df_fleet(spark, n: int):
 
 
 def main() -> None:
-    from rhealpixdggs_spark.operators.tiling import (
-        polygons_to_df,
-        zone_tiles_many,
-        zone_tiles_many_df,
-    )
+    from rhealpixdggs_spark.operators.tiling import zone_tiles_many_df
     from rhealpixdggs_spark.session import get_spark
 
     spark = get_spark(app_name="zone-tiles-scale", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
 
     out = {"res_limit": RES_LIMIT, "runs": {}}
-    # warm both code paths so imports/JIT don't count as growth; also
-    # check they agree on the warm fleet before timing anything
-    warm = dict_fleet(200)
-    a = sorted(
-        (r.zone, r.tile_id)
-        for r in zone_tiles_many(spark, warm, RES_LIMIT).collect()
-    )
-    b = sorted(
-        (r.zone, r.tile_id)
-        for r in zone_tiles_many_df(
-            spark, polygons_to_df(spark, warm), RES_LIMIT
-        ).collect()
-    )
-    assert a == b and a, "dict/DF zone rasterizers disagree on warm fleet"
+    # warm the code path so imports/JIT don't count as growth
     zone_tiles_many_df(spark, df_fleet(spark, 200), RES_LIMIT).write.format(
         "noop").mode("overwrite").save()
 
     for variant, runner in [
         ("df", lambda n: zone_tiles_many_df(
             spark, df_fleet(spark, n), RES_LIMIT)),
-        ("dict", lambda n: zone_tiles_many(
-            spark, dict_fleet(n), RES_LIMIT)),
     ]:
         for n in (1_000, 10_000):
             gc.collect()
@@ -122,8 +91,6 @@ def main() -> None:
     out["summary"] = {
         "df_delta_1k_mb": d["df_1000"]["driver_rss_delta_mb"],
         "df_delta_10k_mb": d["df_10000"]["driver_rss_delta_mb"],
-        "dict_delta_1k_mb": d["dict_1000"]["driver_rss_delta_mb"],
-        "dict_delta_10k_mb": d["dict_10000"]["driver_rss_delta_mb"],
         "df_wall_ratio_10x": round(
             d["df_10000"]["wall_sec"] / max(d["df_1000"]["wall_sec"], 1e-9),
             2,
@@ -132,10 +99,8 @@ def main() -> None:
             "DF-native zone rasterizer: driver RSS delta must stay "
             "~flat from 1k to 10k zones (fleet generated and consumed "
             "executor-side; geometry reaches classify via the zone "
-            "equi-join). The dict fleet's delta grows with the fleet: "
-            "vertex lists + the pickled geometry lookup live on the "
-            "driver. Both paths run the same <= res_limit+1 lock-step "
-            "jobs; wall ratio for 10x zones should be well under 10x "
+            "equi-join). It runs <= res_limit+1 lock-step jobs; the "
+            "wall ratio for 10x zones should be well under 10x "
             "(per-level fixed cost amortizes)."
         ),
     }
