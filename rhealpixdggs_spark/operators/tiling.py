@@ -1166,8 +1166,9 @@ def polygons_to_df(spark: SparkSession, polygons: dict[str, list]) -> DataFrame:
     the vertex table the fleet operators consume: one row per vertex,
     ring 0 the exterior, rings >= 1 the holes, vertices ordered by
     vtx. The dict-input operators (zone_tiles_many, polygon_join,
-    polyfill_df's refine) run on its output as a local relation; fleets too big for the driver should build the vertex
-    table distributedly (parquet scan, spark.range generator, ...)."""
+    polyfill_df's refine) run on its output as a local relation;
+    fleets too big for the driver should build the vertex table
+    distributedly (parquet scan, spark.range generator, ...)."""
     rows = []
     for zone, polys in polygons.items():
         for pi, (ext, holes) in enumerate(polys):
@@ -1267,7 +1268,8 @@ def fleet_candidate_idx(
     per-part exterior bbox stats are a JVM aggregation, the HEALPix y
     of the lat extremes is one tiny Arrow pass over the per-part
     rows, and band spans plus polar-cap ring runs are then column
-    math from those same rows (_part_candidate_idx; each part's own longitude wedge, padded by 4x the
+    math from those same rows (_part_candidate_idx, shared with
+    polyfill_many; each part's own longitude wedge, padded by 4x the
     cell-to-nucleus longitude bound, drives its cap runs). The output
     is a SUPERSET of the cells holding a point of each part, so it
     prefilters both centroid membership (polyfill_many_df) and point

@@ -54,6 +54,36 @@ def test_polyfill_df_matches_kernel(spark, name, ring, holes, res):
     assert got == exp
 
 
+PLANE_POLYS = [
+    (
+        "holed",
+        [(
+            [(-2.0e6, -1.5e6), (3.0e6, -2.0e6), (3.5e6, 2.5e6), (-1.0e6, 3.0e6)],
+            [[(0.0, 0.0), (1.5e6, 0.0), (0.75e6, 1.5e6)]],
+        )],
+    ),
+    (
+        "two_parts_cap",
+        [
+            ([(8.0e6, -1.0e6), (1.2e7, -1.0e6), (1.2e7, 1.0e6), (8.0e6, 1.0e6)], []),
+            ([(-1.7e7, 3.0e6), (-1.3e7, 3.0e6), (-1.5e7, 8.0e6)], []),
+        ],
+    ),
+]
+
+
+@pytest.mark.parametrize("name,polys", PLANE_POLYS)
+def test_polyfill_df_plane_matches_kernel(spark, name, polys):
+    """plane=True: planar bbox covers, planar centroids refined against
+    the planar rings (holes and multiple parts included)."""
+    exp = sorted(KR.polyfill(WGS84_003, polys, 3, plane=True))
+    got = sorted(
+        r.tile_id
+        for r in polyfill_df(spark, {name: polys}, 3, plane=True).collect()
+    )
+    assert got == exp and len(got) > 0
+
+
 def test_polyfill_df_euro_matches_kernel(spark):
     from __spark_entry__ import EURO_RING
 
@@ -341,7 +371,7 @@ class TestPolyfillManyDF:
 
     def test_matches_polyfill_many(self, spark):
         from rhealpixdggs_spark.operators.tiling import (
-            polyfill_many_df, polygons_to_df,
+            polyfill_many, polyfill_many_df, polygons_to_df,
         )
 
         exp = {
@@ -356,13 +386,18 @@ class TestPolyfillManyDF:
             ).collect()
         }
         assert got == exp and len(got) > 0
+        many = {
+            (r.tile_id, r.res, r.zone)
+            for r in polyfill_many(spark, self.ZONES, 3).collect()
+        }
+        assert many == exp
 
     def test_dateline_auto_split_and_false_raises(self, spark):
         import pytest as _pytest
         from py4j.protocol import Py4JJavaError
 
         from rhealpixdggs_spark.operators.tiling import (
-            polyfill_many_df, polygons_to_df,
+            polyfill_many, polyfill_many_df, polygons_to_df,
         )
 
         zones = {"x": [([(175.0, -5.0), (-175.0, -5.0), (180.0, 6.0)], [])]}
@@ -374,6 +409,10 @@ class TestPolyfillManyDF:
             r.tile_id for r in polyfill_many_df(spark, pdf, 3).collect()
         )
         assert got == exp and len(got) > 0
+        many = sorted(
+            r.tile_id for r in polyfill_many(spark, zones, 3).collect()
+        )
+        assert many == exp
         # the ValueError raised in the distributed resolve stage
         # surfaces as a PythonException / Py4JJavaError from the job
         with _pytest.raises(Exception, match="antimeridian"):
@@ -385,7 +424,7 @@ class TestPolyfillManyDF:
         """Two overlapping parts in one zone must dedupe to distinct
         tiles, matching the kernel polyfill's union over parts."""
         from rhealpixdggs_spark.operators.tiling import (
-            polyfill_many_df, polygons_to_df,
+            polyfill_many, polyfill_many_df, polygons_to_df,
         )
 
         zones = {"two": [
@@ -403,6 +442,11 @@ class TestPolyfillManyDF:
             ).collect()
         )
         assert got == exp and len(got) > 0
+        many = sorted(
+            (r.tile_id, r.zone)
+            for r in polyfill_many(spark, zones, 3).collect()
+        )
+        assert many == exp
 
 
 class TestPolygonJoinDF:
