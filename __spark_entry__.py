@@ -1490,10 +1490,11 @@ def _q_pip_polygon(spark, sf_dir):
 
 def _q_polygon_join(spark, sf_dir):
     """Point-in-polygon spatial join against a polygon list
-    (operators/joins.polygon_join): an adapter that flattens the list
-    to a vertex table and runs polygon_join_df's plan — packed-int64
-    candidate cells, then the even_odd_refine fold over each zone's
-    rings. Oracle: independent half-plane algebra per convex zone."""
+    (operators/joins.polygon_join): an adapter that builds the
+    per-zone fleet table on the driver and runs polygon_join_df's plan
+    from it — packed-int64 candidate cells, then the even_odd_refine
+    fold over each zone's rings. Oracle: independent half-plane
+    algebra per convex zone."""
     from rhealpixdggs_spark.operators.joins import polygon_join
 
     pts = _points(spark, sf_dir)
@@ -1507,11 +1508,13 @@ def _q_polygon_join(spark, sf_dir):
 
 def _q_polygon_join_df(spark, sf_dir):
     """DataFrame-NATIVE point-in-polygon join: the fleet arrives as a
-    vertex TABLE (zone, part, ring, vtx, lon, lat), candidates are the
-    packed-int64 bbox cover (shared fleet_candidate_idx), the refine
-    folds each candidate zone's ring table inline (even_odd_refine),
-    with no join back to the points — nothing about the fleet on the
-    driver (operators/joins.polygon_join_df, r5). Oracle: the same
+    vertex TABLE (zone, part, ring, vtx, lon, lat), one Arrow pass and
+    one groupBy(zone) turn it into the per-zone fleet table, whose
+    inlined parts give the packed-int64 bbox cover (shared
+    fleet_candidate_idx) and whose rings the refine folds inline per
+    candidate zone (even_odd_refine), with no join back to the points
+    and no cache — nothing about the fleet on the driver
+    (operators/joins.polygon_join_df, r5). Oracle: the same
     independent half-plane algebra as polygon_join."""
     from rhealpixdggs_spark.operators.joins import polygon_join_df
     from rhealpixdggs_spark.operators.tiling import polygons_to_df

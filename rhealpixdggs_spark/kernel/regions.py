@@ -15,6 +15,7 @@ rhp_wrappers.py:592 and dggs.py:1161-1167).
 
 from __future__ import annotations
 
+import math
 import re
 
 import numpy as np
@@ -496,6 +497,30 @@ def _clip_ring_halfplane(ring, seam: float, keep_le: bool) -> list:
     return out
 
 
+def _unwrap_lons(lons, half: float) -> np.ndarray:
+    """A ring's finite longitudes unwrapped so that consecutive
+    vertices never jump more than `half` (the half-turn in the ring's
+    unit): each vertex moves by whole turns toward its predecessor.
+    A jump wider than 3*half (never taken by an in-range ring whose
+    unwrap stays within a turn of the range, so such a ring unwraps
+    bit-identically to the plain stepping loop) first moves the vertex by the exact remainders of both longitudes
+    mod a turn, so the stepping loop runs at most twice and the unwrap
+    ends for any finite input, a longitude so large that subtracting
+    a turn rounds back to itself included."""
+    lons = [float(x) for x in lons]
+    turn = 2 * half
+    for i in range(1, len(lons)):
+        if abs(lons[i] - lons[i - 1]) > 3 * half:
+            lons[i] = lons[i - 1] + (
+                math.remainder(lons[i], turn) - math.remainder(lons[i - 1], turn)
+            )
+        while lons[i] - lons[i - 1] > half:
+            lons[i] -= turn
+        while lons[i] - lons[i - 1] < -half:
+            lons[i] += turn
+    return np.asarray(lons, dtype=np.float64)
+
+
 def split_antimeridian(polygons, radians: bool = False) -> list:
     """Normalize dateline-crossing polygons into polygons that stay
     within [-180, 180] — the preprocessing that lifts the documented
@@ -513,20 +538,20 @@ def split_antimeridian(polygons, radians: bool = False) -> list:
     with the same seam and attached to both sides; empty clips drop
     out); non-crossing polygons pass through with longitudes shifted
     back into range. Polygons spanning more than a full revolution
-    are rejected."""
+    are rejected. A polygon with a non-finite vertex (NaN or +-inf)
+    covers nothing and is dropped."""
     half = np.pi if radians else 180.0
     out = []
     for exterior, holes in polygons:
+        if not all(
+            np.isfinite(np.asarray(r, dtype=np.float64)).all()
+            for r in (exterior, *holes)
+        ):
+            continue
 
         def unwrap(ring):
-            lons = np.asarray([p[0] for p in ring], dtype=np.float64)
-            lats = [p[1] for p in ring]
-            for i in range(1, len(lons)):
-                while lons[i] - lons[i - 1] > half:
-                    lons[i] -= 2 * half
-                while lons[i] - lons[i - 1] < -half:
-                    lons[i] += 2 * half
-            return list(zip(lons.tolist(), lats))
+            lons = _unwrap_lons([p[0] for p in ring], half)
+            return list(zip(lons.tolist(), [p[1] for p in ring]))
 
         ext = unwrap(exterior)
         lo = min(p[0] for p in ext)
@@ -541,8 +566,8 @@ def split_antimeridian(polygons, radians: bool = False) -> list:
             anchoring to the hole's own first vertex instead would
             attach far-side-of-seam holes to the wrong half."""
             hu = unwrap(h)
-            mid = (min(p[0] for p in hu) + max(p[0] for p in hu)) / 2.0
-            k = round(((lo + hi) / 2.0 - mid) / (2 * half))
+            mid = min(p[0] for p in hu) / 2.0 + max(p[0] for p in hu) / 2.0
+            k = round((lo / 2.0 + hi / 2.0 - mid) / (2 * half))
             return [(x + k * 2 * half, y) for x, y in hu]
         # Odd multiples of 180 inside (lo, hi) are the seams.
         k_lo = int(np.ceil((lo / half - 1) / 2))
@@ -550,7 +575,7 @@ def split_antimeridian(polygons, radians: bool = False) -> list:
         seams = [(2 * k + 1) * half for k in range(k_lo, k_hi + 1) if lo < (2 * k + 1) * half < hi]
         if not seams:
             # No crossing: shift the whole polygon back into range.
-            shift = -2 * half * round((lo + hi) / (4 * half))
+            shift = -2 * half * round((lo / 2 + hi / 2) / (2 * half))
             out.append(
                 (
                     [(x + shift, y) for x, y in ext],
@@ -573,7 +598,7 @@ def split_antimeridian(polygons, radians: bool = False) -> list:
             ]
             side_lo = min(p[0] for p in cext)
             side_hi = max(p[0] for p in cext)
-            shift = -2 * half * round((side_lo + side_hi) / (4 * half))
+            shift = -2 * half * round((side_lo / 2 + side_hi / 2) / (2 * half))
             out.append(
                 (
                     [(x + shift, y) for x, y in cext],
@@ -589,14 +614,13 @@ def ring_crosses_dateline(ring, radians: bool = False) -> bool:
     consecutive-lon jumps > 180° (wrapped form) or longitudes
     continuing past +/-180 (unwrapped form). Uses the same
     unwrap-then-seam-scan as split_antimeridian, so detection and
-    split agree exactly."""
+    split agree exactly. A ring with a non-finite longitude crosses
+    nothing (split_antimeridian drops its polygon)."""
     half = np.pi if radians else 180.0
     lons = np.asarray([p[0] for p in ring], dtype=np.float64)
-    for i in range(1, len(lons)):
-        while lons[i] - lons[i - 1] > half:
-            lons[i] -= 2 * half
-        while lons[i] - lons[i - 1] < -half:
-            lons[i] += 2 * half
+    if not np.isfinite(lons).all():
+        return False
+    lons = _unwrap_lons(lons, half)
     lo, hi = float(lons.min()), float(lons.max())
     k_lo = int(np.ceil((lo / half - 1) / 2))
     k_hi = int(np.floor((hi / half - 1) / 2))

@@ -534,8 +534,8 @@ def polygon_join(
     """Point-in-polygon spatial join against a polygon LIST — the
     north-star "point-in-polygon tests against tile boundaries". An
     adapter over polygon_join_df's plan: the parts are
-    dateline-resolved on the driver, flattened to the vertex table
-    (tiling.polygons_to_df) and joined by the same packed-int64
+    dateline-resolved on the driver, built into the per-zone fleet
+    table (tiling._zone_table) and joined by the same packed-int64
     candidate prefilter and even_odd_refine fold, so there is one
     point-in-polygon plan whatever the fleet's input form.
 
@@ -555,7 +555,7 @@ def polygon_join(
     4). split_dateline=True forces the split path for every polygon;
     split_dateline=False raises ValueError, eagerly, if a ring
     crosses."""
-    from .tiling import _resolve_split_dateline, polygons_to_df
+    from .tiling import _resolve_split_dateline, _zone_table
 
     _check_points_columns(points, "polygon_join")
     zones: dict = {}
@@ -568,7 +568,7 @@ def polygon_join(
         for zone, polys in zones.items()
     }
     return _polygon_join_core(
-        points, polygons_to_df(points.sparkSession, zones), res, cfg,
+        points, _zone_table(points.sparkSession, zones, cfg), res, cfg,
         lon_col, lat_col, points.columns[0],
     )
 
@@ -582,19 +582,19 @@ def _check_points_columns(points: DataFrame, caller: str) -> None:
 
 def _polygon_join_core(
     points: DataFrame,
-    resolved: DataFrame,
+    zones: DataFrame,
     res: int,
     cfg: DggsConfig,
     lon_col: str,
     lat_col: str,
     point_id: str,
 ) -> DataFrame:
-    """polygon_join_df from a dateline-RESOLVED vertex table on:
-    candidate cells, one encode of the points, the even-odd refine."""
+    """polygon_join_df from the per-zone fleet table on: candidate
+    cells, one encode of the points, the even-odd refine."""
     from ..functions.udfs import rhp_encode_index
     from .tiling import even_odd_refine, fleet_candidate_idx
 
-    cand = fleet_candidate_idx(resolved, cfg, res).distinct()
+    cand = fleet_candidate_idx(zones, cfg, res).distinct()
     enc = points.select(
         "*",
         F.when(F.col(lon_col) == 180.0, F.lit(-180.0))
@@ -603,7 +603,7 @@ def _polygon_join_core(
         rhp_encode_index(F.col(lon_col), F.col(lat_col), res, cfg)
         .alias("_idx"),
     )
-    matches = even_odd_refine(enc.join(cand, "_idx"), resolved, "_px", "_py")
+    matches = even_odd_refine(enc.join(cand, "_idx"), zones, "_px", "_py")
     return matches.select(
         point_id, *[c for c in points.columns if c != point_id], "zone"
     )
@@ -630,11 +630,17 @@ def polygon_join_df(
     an adapter over the same plan from step 2 on.
 
     Plan shape (all equi-joins and aggregations, no nested-loop, no
-    driver collect):
-      1. tiling.resolve_fleet_vertices dateline-resolves the fleet in
-         one Arrow pass (split parts re-keyed part*64+i);
-      2. tiling.fleet_candidate_idx generates each part's candidate
-         cells as packed int64 level-order indices — padded band
+    driver collect, no persist):
+      1. tiling.resolve_fleet_vertices builds the per-zone fleet
+         table: one Arrow pass per (zone, part) dateline-splits it
+         (split parts re-keyed part*64+i) and emits each piece's
+         bbox, HEALPix y extremes and rings, and one groupBy(zone)
+         collects them. Steps 2 and 4 both read this table; the
+         refine's broadcast reuses the zone aggregation's exchange
+         (ReusedExchange), so the Python pass runs once per action;
+      2. tiling.fleet_candidate_idx inlines the zone table's parts
+         and generates each part's candidate cells as packed int64
+         level-order indices — padded band
          spans of its bbox plus, in the polar caps, one run of cells
          per square ring along its longitude wedge (padded by 4x the
          cell-to-nucleus longitude bound) — a SUPERSET of the cells
@@ -645,17 +651,18 @@ def polygon_join_df(
          the candidate table on the 8-byte key — at 100 TB the big
          side shuffles on int64 (or AQE broadcasts a small fleet's
          cover), never on strings;
-      4. tiling.even_odd_refine joins the per-zone ring table on zone
-         and keeps the rows one SQL fold over the zone's rings puts
-         inside — the kernel's exact crossing predicate per edge,
-         ext-odd AND NOT hole-odd per part, OR over parts. The rows
+      4. tiling.even_odd_refine derives each zone row's edges once,
+         joins the candidates to it on zone and keeps the rows one
+         SQL fold over the zone's rings puts inside — the kernel's
+         exact crossing predicate per edge, ext-odd AND NOT hole-odd
+         per part, OR over parts. The rows
          carry every input column, so nothing joins back: the output
          is [point_id, the other input columns in order, zone], one
          row per matching zone.
 
     `point_id` need not be unique. A `points` column named `zone`,
     `_px`, `_py`, `_idx` or `_rings` raises ValueError. Skew note: a
-    ring table too big to broadcast makes step 4 shuffle on `zone`,
+    zone table too big to broadcast makes step 4 shuffle on `zone`,
     where a zone whose bbox dominates the point table is a hot key;
     split such polygons into parts (the OR over parts makes this
     semantically free) or pre-filter with a finer `res`.
@@ -668,18 +675,11 @@ def polygon_join_df(
     from .tiling import resolve_fleet_vertices
 
     _check_points_columns(points, "polygon_join_df")
-
-    # resolved feeds both the candidate spans and the even-odd ring
-    # table; persist() — lazily — so the collect_list + Arrow
-    # dateline-split + explode runs once per action, not twice (same
-    # as polyfill_many_df). Input-sized; MEMORY_AND_DISK spills.
-    from pyspark import StorageLevel
-
-    resolved = resolve_fleet_vertices(
+    zones = resolve_fleet_vertices(
         polygons, cfg, split_dateline, "polygon_join_df"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     return _polygon_join_core(
-        points, resolved, res, cfg, lon_col, lat_col, point_id
+        points, zones, res, cfg, lon_col, lat_col, point_id
     )
 
 

@@ -14,18 +14,20 @@ polyfill_tiles remains as the driver-side NumPy fast path for a
 handful of small polygons whose result should land in a
 broadcastable local DataFrame.
 
-The vertex-table operators zone_tiles_many_df and
-joins.polygon_join_df dateline-resolve the table, then hand it to a
-private core (_zone_tiles_core, joins._polygon_join_core). The
-dict/list-input zone_tiles_many and joins.polygon_join are adapters:
-they resolve the dateline on the driver, flatten the input with
-polygons_to_df and call the same core. polyfill_many keeps its own
-driver-side candidate rows and Arrow even-odd, because the adapter
-over polyfill_many_df measured slower on bench.py's band-only fleet.
-Otherwise even_odd_refine (a SQL fold over each zone's rings) is the
-Spark-side even-odd; polyfill_df's per-part centroid filter uses it,
-in either frame. The kernel's points_in_polygon stays as the oracle
-the tests compare against."""
+The polygon-fleet operators read one per-zone fleet table
+(ZONE_TABLE_SCHEMA): one row per zone whose `parts` hold, per
+dateline-resolved part, its exterior's longitude range, the HEALPix
+planar y of its latitude extremes and its rings as vertex arrays.
+resolve_fleet_vertices builds it from a vertex table in one Arrow
+pass per (zone, part) and one groupBy(zone); the dict/list-input
+adapters (zone_tiles_many, polyfill_many, joins.polygon_join and
+polyfill_df's refine) build it on the driver with the same
+_part_rows. Every consumer reads that table: fleet_candidate_idx
+inlines its parts, even_odd_refine (a SQL fold over each zone's
+rings, the one Spark-side even-odd) derives the zone's edges once per
+zone row, and the zone rasterizer (_zone_tiles_core) rebuilds each
+zone's geometry from it. The kernel's points_in_polygon stays as the
+oracle the tests compare against."""
 
 from __future__ import annotations
 
@@ -47,7 +49,15 @@ def _resolve_split_dateline(polys, split_dateline, cfg, opname: str):
     split_dateline=None (default) detects crossing rings and
     auto-splits them; True forces the split path; False asserts none
     cross and raises ValueError so a forgotten flag can never produce
-    silently-partial covers."""
+    silently-partial covers. A part with a non-finite vertex (NaN or
+    +-inf) covers nothing and is dropped first."""
+    polys = [
+        (ext, holes) for ext, holes in polys
+        if all(
+            np.isfinite(np.asarray(r, dtype=np.float64)).all()
+            for r in (ext, *holes)
+        )
+    ]
     crossing = [
         i
         for i, (ext, _h) in enumerate(polys)
@@ -62,7 +72,7 @@ def _resolve_split_dateline(polys, split_dateline, cfg, opname: str):
         )
     if split_dateline or (split_dateline is None and crossing):
         return KR.split_antimeridian(polys, radians=cfg.radians)
-    return list(polys)
+    return polys
 
 
 def grid_ids(spark: SparkSession, resolution: int, cfg: DggsConfig = WGS84_003,
@@ -430,7 +440,7 @@ def polyfill_df(
     its DISTRIBUTED bbox cover (region_cover_ell_df, or
     region_cover_df for plane=True), the centroid decode is one Arrow
     pass (rhp_centroid), and membership is even_odd_refine against
-    the part's vertex table (polygons_to_df); a zone is the union of
+    the part's zone-table row (_zone_table); a zone is the union of
     its parts' cells — no driver-side cell list at any point. The
     refine reads any x/y frame, so plane=True tests planar centroids
     against planar rings. Output: (tile_id, res, zone).
@@ -466,7 +476,7 @@ def polyfill_df(
         # explicit round-robin fan-out: the distinct() output is
         # small in BYTES, so AQE would coalesce it onto one task —
         # but the centroid decode downstream is Python COMPUTE (GL
-        # integrals for dart/skew cells); see polyfill_many's note
+        # integrals for dart/skew cells); see _polyfill_many_core's note
         cells = cells.distinct().repartition(
             spark.sparkContext.defaultParallelism
         )
@@ -478,8 +488,8 @@ def polyfill_df(
             "zone", "cell_id",
             F.col("_c")["lon"].alias("cx"), F.col("_c")["lat"].alias("cy"),
         )
-        parts = polygons_to_df(
-            spark, {str(k): [part] for k, part in enumerate(polys)}
+        parts = _zone_table(
+            spark, {str(k): [part] for k, part in enumerate(polys)}, cfg
         )
         keep = even_odd_refine(cand, parts, "cx", "cy")
         keep = keep.select("cell_id").distinct()
@@ -671,8 +681,8 @@ def zone_tiles_many(
     """Lock-step distributed CellZoneFromPoly for MANY named zones,
     from a polygon dict: an adapter over zone_tiles_many_df's plan.
     The parts are dateline-resolved on the driver (so
-    split_dateline=False raises eagerly), flattened to the vertex
-    table (polygons_to_df) and rasterized by the same lock-step
+    split_dateline=False raises eagerly), built into the per-zone
+    fleet table (_zone_table) and rasterized by the same lock-step
     frontier, so a fleet of 10k polygons takes <= res_limit+1 Spark
     jobs TOTAL (zone_tiles would launch a per-level job sequence per
     zone and union 10k plans). `polygons` maps zone name ->
@@ -687,26 +697,8 @@ def zone_tiles_many(
         for name, polys in polygons.items()
     }
     return _zone_tiles_core(
-        spark, polygons_to_df(spark, polygons), res_limit, cfg, checkpoint
+        spark, _zone_table(spark, polygons, cfg), res_limit, cfg, checkpoint
     )
-
-
-def _polys_from_vertex_rows(rows) -> list:
-    """Rebuild a zone's [(exterior, holes), ...] part list from its
-    sorted (part, ring, vtx, lon, lat) vertex rows — the executor-side
-    inverse of polygons_to_df / resolve_fleet_vertices output."""
-    parts: dict = {}
-    for r in rows:
-        parts.setdefault(r["part"], {}).setdefault(r["ring"], []).append(
-            (float(r["lon"]), float(r["lat"]))
-        )
-    out = []
-    for p in sorted(parts):
-        rings = parts[p]
-        out.append(
-            (rings[0], [rings[k] for k in sorted(rings) if k != 0])
-        )
-    return out
 
 
 def zone_tiles_many_df(
@@ -721,63 +713,74 @@ def zone_tiles_many_df(
     mixed-resolution frontier advances ALL zones together (<=
     res_limit+1 jobs total), and the fleet arrives as a VERTEX TABLE
     (zone, part, ring, vtx, lon, lat), so NOTHING about it ever lives
-    on the driver: the geometry reaches the classify pass through an
+    on the driver: resolve_fleet_vertices turns it into the per-zone
+    fleet table, whose rows reach the classify pass through an
     equi-join on zone instead of a pickled dict closure, and the
     per-zone root search (finest bounding cell + res-0 seeding) runs
-    executor-side in one Arrow pass over the per-zone rows. A
-    10^6-zone fleet is just a bigger input table. zone_tiles_many is
-    an adapter over the same plan from the resolved vertex table on.
+    executor-side in one Arrow pass over those rows. A 10^6-zone
+    fleet is just a bigger input table. zone_tiles_many is an adapter
+    over the same plan from the zone table on.
 
     Per-level plan: frontier children (a column explode) equi-join
-    the localCheckpoint'ed per-zone geometry table on zone, and ONE
-    pandas UDF classifies the batch — geometry is rebuilt once per
-    DISTINCT zone per batch (the join hash-partitions by zone, so
-    batches hold few zones and the rebuild amortizes). Each frontier
-    row carries its zone's vertex array through the join (fine for
-    parcel/admin-scale rings; a 10^6-vertex coastline duplicates per
-    cell — shard such zones into parts first). Roots may sit at
-    different depths (each zone's finest bounding cell), so the
-    at-limit emit test is per-row column math. Output:
-    (tile_id, res, zone), same cell sets as zone_from_poly_df per
-    zone."""
-    resolved = resolve_fleet_vertices(
+    the localCheckpoint'ed zone table on zone, and ONE pandas UDF
+    classifies the batch — geometry is rebuilt once per DISTINCT zone
+    per batch (the join hash-partitions by zone, so batches hold few
+    zones and the rebuild amortizes). Each frontier row carries its
+    zone's rings through the join (fine for parcel/admin-scale rings;
+    a 10^6-vertex coastline duplicates per cell — shard such zones
+    into parts first). Roots may sit at different depths (each zone's
+    finest bounding cell), so the at-limit emit test is per-row
+    column math. Output: (tile_id, res, zone), same cell sets as
+    zone_from_poly_df per zone."""
+    zones = resolve_fleet_vertices(
         polygons, cfg, split_dateline, "zone_tiles_many_df"
     )
-    return _zone_tiles_core(spark, resolved, res_limit, cfg, checkpoint)
+    return _zone_tiles_core(spark, zones, res_limit, cfg, checkpoint)
 
 
 def _zone_tiles_core(
     spark: SparkSession,
-    resolved: DataFrame,
+    zones: DataFrame,
     res_limit: int,
     cfg: DggsConfig,
     checkpoint: bool,
 ) -> DataFrame:
-    """zone_tiles_many_df from a dateline-RESOLVED vertex table on:
-    the per-zone geometry table, the root search and the lock-step
-    frontier."""
+    """zone_tiles_many_df from the per-zone fleet table on: the root
+    search and the lock-step frontier."""
     from ..kernel import zones as KZ
     from ..kernel.constants import CELLS0
 
-    # explicit round-robin fan-out: the per-zone geometry table is tiny
-    # in BYTES, so AQE's byte-based coalescing would serialize the
-    # compute-dense _roots / _classify Arrow passes onto one task (the
-    # polyfill GL-centroid lesson); hash keys would be eliminated as
-    # redundant with the groupBy's own Exchange, round-robin is not
+    # The UDFs read each ring as a struct of coordinate arrays:
+    # PySpark's Arrow-to-pandas conversion fails on ragged nested
+    # arrays (a part's rings, array<array<...>>). Explicit round-robin
+    # fan-out: the zone table is tiny in BYTES, so AQE's byte-based
+    # coalescing would serialize the compute-dense _roots / _classify
+    # Arrow passes onto one task (the polyfill GL-centroid lesson);
+    # hash keys would be eliminated as redundant with the zone
+    # aggregation's own Exchange, round-robin is not
     fanout = spark.sparkContext.defaultParallelism
-    zgeom = resolved.groupBy("zone").agg(
-        F.sort_array(
-            F.collect_list(F.struct("part", "ring", "vtx", "lon", "lat"))
-        ).alias("g")
+    zgeom = zones.selectExpr(
+        "zone",
+        "transform(parts, p -> named_struct('rings', transform(p.rings, "
+        "r -> named_struct('lon', transform(r, v -> v.lon), "
+        "'lat', transform(r, v -> v.lat))))) AS g",
     ).repartition(fanout)
     if checkpoint:
         zgeom = zgeom.localCheckpoint(eager=True)
 
+    def geometry(g) -> list:
+        """A zone row's parts as [(exterior, holes), ...]."""
+        out = []
+        for p in g:
+            rings = [np.column_stack([r["lon"], r["lat"]]) for r in p["rings"]]
+            out.append((rings[0], rings[1:]))
+        return out
+
     @pandas_udf("array<struct<cell_id:string,kind:string>>")
     def _roots(g_s: pd.Series) -> pd.Series:
         out_all = []
-        for rows in g_s:
-            polys = _polys_from_vertex_rows(rows)
+        for g in g_s:
+            polys = geometry(g)
             geom = KZ._Geometry(polys)
             bc = KZ.get_finest_containing_cell(cfg, polys)
             roots = [bc] if bc is not None else list(CELLS0)
@@ -818,7 +821,7 @@ def _zone_tiles_core(
         for zname in pd.unique(zone):
             zm = z == zname
             first = int(np.flatnonzero(zm)[0])
-            geom = KZ._Geometry(_polys_from_vertex_rows(g.iloc[first]))
+            geom = KZ._Geometry(geometry(g.iloc[first]))
             for L in np.unique(lens[zm]):
                 m = zm & (lens == L)
                 cc, oo, nn = KZ.classify_batch(cfg, s[m].astype(str), geom)
@@ -978,10 +981,17 @@ def _part_candidate_idx(
         f"greatest(y_lo, {_dbl(-y_pole)}) + {_dbl(y_pole)}",
         f"least(y_hi, {_dbl(-band)}) + {_dbl(y_pole)}",
     )
+    # longitudes clamped to +/-2*HALF: no cell lies beyond, and a
+    # finite longitude of any size (1e300) cannot overflow the BIGINT
+    # column and ring-position arithmetic
+    lo, hi = (
+        f"greatest({_dbl(-2 * HALF)}, least({_dbl(2 * HALF)}, {c}))"
+        for c in ("lon_lo", "lon_hi")
+    )
     lines = parts.selectExpr(
-        "zone", "lon_lo", "lon_hi",
-        f"greatest(0, {col_of('lon_lo')} - 1) AS gc0",
-        f"least({4 * n3 - 1}, {col_of('lon_hi')} + 1) AS gc1",
+        "zone", f"{lo} AS lon_lo", f"{hi} AS lon_hi",
+        f"greatest(0, {col_of(lo)} - 1) AS gc0",
+        f"least({4 * n3 - 1}, {col_of(hi)} + 1) AS gc1",
         f"explode(array({band_line}, {north}, {south})) AS s",
     ).where("s.l0 <= s.l1").selectExpr(
         "zone", "lon_lo", "lon_hi", "gc0", "gc1", "s.face AS face",
@@ -1037,138 +1047,59 @@ def polyfill_many(
     partitions: int | None = None,
     split_dateline: bool | None = None,
 ) -> DataFrame:
-    """Lock-step polyfill for MANY polygons in ONE plan: one candidate
-    generator for every polygon part (band row/column spans and
-    polar-cap ring runs, sequence-exploded Spark-side by
-    _part_candidate_idx), a shared packed-int64 dedupe, one
-    index->suid pass, one centroid decode pass, and one per-zone
-    even-odd filter — no per-polygon union, so a mixed 10k-polygon
-    fleet rasterizes with one plan. Correctness needs no lattice
-    parity: candidates are a PADDED SUPERSET of the cells holding a
-    point of each polygon and the centroid-in-polygon filter
+    """Lock-step polyfill for MANY polygons in ONE plan, from a
+    polygon dict: an adapter over polyfill_many_df's plan. The parts
+    are dateline-resolved on the driver (so split_dateline=False
+    raises eagerly), built into the per-zone fleet table (_zone_table)
+    and rasterized by the same candidate generator, shared
+    packed-int64 dedupe, one index->suid pass, one centroid decode
+    pass and even_odd_refine — no per-polygon union, so a mixed
+    10k-polygon fleet rasterizes with one plan. Correctness needs no
+    lattice parity: candidates are a PADDED SUPERSET of the cells
+    holding a point of each polygon and the centroid-in-polygon filter
     (rhp_wrappers.py:510-599 semantics, same as polyfill_df) decides
-    membership.
-
-    Cap candidates (|planar y| >= R*pi/4) come from a CLOSED FORM: in
-    the assembled polar face a parallel's image is the square ring of
-    infinity-norm radius u = R*pi/2 - |y| around the face center
-    (dggs.py:1060-1094's geometry), and along each ring longitude is
-    linear in perimeter position, so a polygon's cap portion is one
-    contiguous run of cells per ring, padded by 4x the
-    cell-to-nucleus longitude bound — the work is proportional to the
-    candidates, not to the rings' perimeters.
+    membership. `partitions` repartitions the zone table.
 
     Dateline: crossing rings are detected (same unwrap-seam scan as
     split_antimeridian) and auto-split into same-zone parts when
     split_dateline is None (the default); True forces the split path,
     False raises if any ring crosses. Output: (tile_id, res, zone)."""
-    from ..functions.udfs import rhp_centroid, rhp_index_to_suid
-    from ..kernel.regions import healpix_forward_cfg
-
     polygons = {
         zone: _resolve_split_dateline(
             polys, split_dateline, cfg, f"polyfill_many[{zone}]"
         )
         for zone, polys in polygons.items()
     }
-
-    rows = []
-    lookup = {}
-    for zone, polys in polygons.items():
-        lookup[zone] = [
-            (
-                [(float(x), float(y)) for x, y in ext],
-                [[(float(x), float(y)) for x, y in h] for h in holes],
-            )
-            for ext, holes in polys
-        ]
-        for ext, _holes in polys:
-            arr = np.asarray(ext, dtype=np.float64)
-            _, y = healpix_forward_cfg(
-                cfg, np.zeros(2), np.array([arr[:, 1].min(), arr[:, 1].max()])
-            )
-            rows.append((
-                zone, float(arr[:, 0].min()), float(arr[:, 0].max()),
-                float(y[0]), float(y[1]),
-            ))
-
-    parts = spark.createDataFrame(
-        rows,
-        "zone string, lon_lo double, lon_hi double, y_lo double, y_hi double",
-    )
+    zones = _zone_table(spark, polygons, cfg)
     if partitions:
-        parts = parts.repartition(partitions)
-    # Dedupe multi-part zones on the packed int64 BEFORE decoding:
-    # the distinct's shuffle is 8-byte keys, and it spreads the
-    # decode + centroid Arrow passes across the full shuffle
-    # parallelism instead of the few input partitions of the tiny
-    # parts table.
-    keyed = _part_candidate_idx(parts, cfg, res)
-    # Explicit round-robin fan-out before the Gauss-Legendre centroid
-    # pass: the distinct() output is only a few MB, so AQE's
-    # BYTE-based coalescing would fold it into one task — but the
-    # downstream cost is ~1.75 ms/row of Python COMPUTE (dart/skew GL
-    # integrals), which serialized on one core both slows the job
-    # ~cores-x and makes wall time hostage to single-task noise (the
-    # r4 bench's 6.4 s IQR; BENCH/fleet_mixed_attribution.json).
-    # And decode each DISTINCT cell once, not once per (zone, cell)
-    # pair:
-    # cap-reaching zones SHARE the expensive polar dart/skew cells
-    # (the ~1.75 ms/row GL integrals), and band zones share quad
-    # cells wherever bboxes overlap, so the GL pass runs on the
-    # distinct-cell set and pairs re-attach by the 8-byte _idx
-    # equi-join (AQE broadcasts the small cell table). Same pattern
-    # as polyfill_many_df; ~1.9x on the 100k-triangle fleet bench.
-    fanout = keyed.sparkSession.sparkContext.defaultParallelism
-    cells = (
-        keyed.select("_idx")
-        .distinct()
-        .repartition(fanout)
-        .select("_idx", rhp_index_to_suid("_idx", res, cfg).alias("tile_id"))
-        .withColumn("_c", rhp_centroid(F.col("tile_id"), cfg, plane=False))
-    )
-    cand = keyed.distinct().join(cells, "_idx").select("zone", "tile_id", "_c")
-
-    @pandas_udf(T.BooleanType())
-    def _in_zone(zo: pd.Series, lo: pd.Series, la: pd.Series) -> pd.Series:
-        out = np.zeros(len(lo), dtype=bool)
-        lon = lo.to_numpy(np.float64)
-        lat = la.to_numpy(np.float64)
-        for z in zo.unique():
-            m = (zo == z).to_numpy()
-            hit = np.zeros(int(m.sum()), dtype=bool)
-            for ext, holes in lookup[z]:
-                hit |= KR.points_in_polygon(lon[m], lat[m], ext, holes)
-            out[m] = hit
-        return pd.Series(out, index=lo.index)
-
-    return (
-        cand.where(
-            _in_zone.asNondeterministic()(
-                F.col("zone"), F.col("_c")["lon"], F.col("_c")["lat"]
-            )
-        )
-        .select(
-            "tile_id",
-            (F.length("tile_id") - 1).cast("int").alias("res"),
-            "zone",
-        )
-    )
+        zones = zones.repartition(partitions)
+    pairs = fleet_candidate_idx(zones, cfg, res).distinct()
+    return _polyfill_many_core(pairs, zones, res, cfg)
 
 
 POLYGON_TABLE_SCHEMA = (
     "zone string, part int, ring int, vtx int, lon double, lat double"
 )
 
+# one row per zone; per part its exterior's longitude range, the
+# HEALPix planar y of its latitude extremes and its rings (exterior
+# first) as vertex arrays, parts sorted by id
+PART_TYPE = (
+    "struct<part:bigint, lon_lo:double, lon_hi:double, y_lo:double, "
+    "y_hi:double, rings:array<array<struct<lon:double, lat:double>>>>"
+)
+ZONE_TABLE_SCHEMA = f"zone string, parts array<{PART_TYPE}>"
+
 
 def polygons_to_df(spark: SparkSession, polygons: dict[str, list]) -> DataFrame:
     """Flatten a polygon dict (zone -> [(exterior, holes), ...]) into
-    the vertex table the fleet operators consume: one row per vertex,
-    ring 0 the exterior, rings >= 1 the holes, vertices ordered by
-    vtx. The dict-input operators (zone_tiles_many, polygon_join,
-    polyfill_df's refine) run on its output as a local relation;
-    fleets too big for the driver should build the vertex table
-    distributedly (parquet scan, spark.range generator, ...)."""
+    the vertex table the *_df fleet operators take as input: one row
+    per vertex, ring 0 the exterior, rings >= 1 the holes, vertices
+    ordered by vtx. The operators turn it into the per-zone fleet
+    table (resolve_fleet_vertices); the dict-input operators build
+    that table directly on the driver (_zone_table). Fleets too big
+    for the driver should build the vertex table distributedly
+    (parquet scan, spark.range generator, ...)."""
     rows = []
     for zone, polys in polygons.items():
         for pi, (ext, holes) in enumerate(polys):
@@ -1178,30 +1109,76 @@ def polygons_to_df(spark: SparkSession, polygons: dict[str, list]) -> DataFrame:
     return spark.createDataFrame(rows, POLYGON_TABLE_SCHEMA)
 
 
+def _part_rows(pieces: list, cfg: DggsConfig) -> list[dict]:
+    """The zone-table part rows (PART_TYPE) of dateline-RESOLVED
+    pieces [(part, exterior, holes), ...]: the exterior's longitude
+    range, the HEALPix planar y of its latitude extremes (one kernel
+    call for all pieces) and the rings as vertex arrays."""
+    if not pieces:
+        return []
+    exts = [np.asarray(ext, dtype=np.float64).reshape(-1, 2) for _, ext, _ in pieces]
+    lat = np.array([e[:, 1].min() for e in exts] + [e[:, 1].max() for e in exts])
+    _, y = KR.healpix_forward_cfg(cfg, np.zeros(lat.size), lat)
+    n = len(pieces)
+    return [
+        {
+            "part": int(part),
+            "lon_lo": float(e[:, 0].min()), "lon_hi": float(e[:, 0].max()),
+            "y_lo": float(y[k]), "y_hi": float(y[n + k]),
+            "rings": [
+                [{"lon": float(x), "lat": float(v)} for x, v in ring]
+                for ring in (ext, *holes)
+            ],
+        }
+        for k, ((part, ext, holes), e) in enumerate(zip(pieces, exts))
+    ]
+
+
+def _zone_table(
+    spark: SparkSession, polygons: dict[str, list], cfg: DggsConfig
+) -> DataFrame:
+    """The per-zone fleet table of an already dateline-RESOLVED polygon
+    dict, as a local relation: the dict adapters' stand-in for
+    resolve_fleet_vertices (no shuffle, no Python stage)."""
+    pieces = [
+        (zone, (k, ext, holes))
+        for zone, polys in polygons.items()
+        for k, (ext, holes) in enumerate(polys)
+    ]
+    parts: dict = {zone: [] for zone in polygons}
+    for (zone, _), row in zip(pieces, _part_rows([p for _, p in pieces], cfg)):
+        parts[zone].append(row)
+    return spark.createDataFrame(list(parts.items()), ZONE_TABLE_SCHEMA)
+
+
 def resolve_fleet_vertices(
     polygons: DataFrame,
     cfg: DggsConfig,
     split_dateline: bool | None,
     caller: str,
 ) -> DataFrame:
-    """Dateline-resolve a polygon-fleet VERTEX TABLE
-    (zone, part, ring, vtx, lon, lat) — ring 0 the exterior, rings
-    >= 1 holes — entirely executor-side: vertices collect_list into
-    one array per (zone, part) (a JVM partial-aggregation shuffle)
-    and ONE Arrow-batched pandas_udf applies the exact kernel
-    split_antimeridian per polygon, exploding back to vertex rows
-    with split parts re-keyed as part*64 + i. A part without a
-    ring 0 has no exterior, so it covers nothing and is dropped (its
-    holes are not renumbered into an exterior). Shared by
-    polyfill_many_df and polygon_join_df; split_dateline semantics
-    are the fleet-wide defaults (None detects, True forces, False
-    raises inside the distributed stage)."""
-    # round-robin fan-out before _split: the grouped vertex table is
+    """The per-zone fleet table (ZONE_TABLE_SCHEMA) of a polygon-fleet
+    VERTEX TABLE (zone, part, ring, vtx, lon, lat) — ring 0 the
+    exterior, rings >= 1 holes — built entirely executor-side:
+    vertices collect_list into one array per (zone, part) (a JVM
+    partial-aggregation shuffle), ONE Arrow-batched pandas_udf applies
+    the exact kernel split_antimeridian per polygon and emits each
+    piece's part row (_part_rows; split pieces keyed part*64 + j), and
+    one groupBy(zone) collects a zone's part rows. A part without a
+    ring 0 has no exterior, and a part with a non-finite vertex
+    (NaN, +-inf) covers nothing: both are dropped, and a zone left
+    without parts has no row. Every polygon-fleet consumer reads this
+    table, so an action that uses it twice (candidates and refine)
+    reuses the zone aggregation's exchange and runs the Python pass
+    once. split_dateline semantics are the fleet-wide defaults (None
+    detects, True forces, False raises inside the distributed
+    stage)."""
+    # round-robin fan-out before _pieces: the grouped vertex table is
     # tiny in bytes, so AQE's byte-based coalescing would run the
     # per-polygon Python split loop on few tasks (measured: 3.85 s ->
     # 2.69 s at a 100k fleet, and the serial share grows with fleet
-    # size); downstream consumers all re-shuffle, so the partitioning
-    # is free to be round-robin
+    # size); the zone aggregation re-shuffles anyway, so the
+    # partitioning is free to be round-robin
     fanout = polygons.sparkSession.sparkContext.defaultParallelism
     grouped = polygons.groupBy("zone", "part").agg(
         F.sort_array(
@@ -1209,20 +1186,11 @@ def resolve_fleet_vertices(
         ).alias("verts")
     ).repartition(fanout)
 
-    out_t = T.ArrayType(T.StructType([
-        T.StructField("part_off", T.IntegerType()),
-        T.StructField("ring", T.IntegerType()),
-        T.StructField("vtx", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ]))
-
-    @pandas_udf(out_t)
-    def _split(verts_s: pd.Series) -> pd.Series:
-        out_all = []
-        for verts in verts_s:
+    @pandas_udf(f"array<{PART_TYPE}>")
+    def _pieces(part_s: pd.Series, verts_s: pd.Series) -> pd.Series:
+        owner, pieces = [], []
+        for k, (part, verts) in enumerate(zip(part_s, verts_s)):
             if verts[0]["ring"] != 0:  # no exterior: the part is empty
-                out_all.append([])
                 continue
             rings: list[list] = []
             cur_ring = None
@@ -1234,103 +1202,72 @@ def resolve_fleet_vertices(
             polys = _resolve_split_dateline(
                 [(rings[0], rings[1:])], split_dateline, cfg, caller,
             )
-            rows = []
             for j, (ext, holes) in enumerate(polys):
-                for ri, ring in enumerate([ext, *holes]):
-                    for vi, (x, y) in enumerate(ring):
-                        rows.append({
-                            "part_off": j, "ring": ri, "vtx": vi,
-                            "lon": float(x), "lat": float(y),
-                        })
-            out_all.append(rows)
-        return pd.Series(out_all, index=verts_s.index)
+                owner.append(k)
+                pieces.append((int(part) * 64 + j, ext, holes))
+        out: list[list] = [[] for _ in range(len(verts_s))]
+        for k, row in zip(owner, _part_rows(pieces, cfg)):
+            out[k].append(row)
+        return pd.Series(out, index=verts_s.index)
 
     return (
         grouped.select(
-            "zone", "part",
-            F.explode(_split.asNondeterministic()(F.col("verts"))).alias("v"),
-        )
-        .select(
             "zone",
-            (F.col("part").cast("long") * 64 + F.col("v.part_off"))
-            .alias("part"),
-            F.col("v.ring").alias("ring"), F.col("v.vtx").alias("vtx"),
-            F.col("v.lon").alias("lon"), F.col("v.lat").alias("lat"),
+            F.explode(
+                _pieces.asNondeterministic()(F.col("part"), F.col("verts"))
+            ).alias("p"),
         )
+        .groupBy("zone")
+        .agg(F.sort_array(F.collect_list("p")).alias("parts"))
     )
 
 
 def fleet_candidate_idx(
-    resolved: DataFrame, cfg: DggsConfig, res: int
+    zones: DataFrame, cfg: DggsConfig, res: int
 ) -> DataFrame:
-    """Candidate res-`res` cells per zone for a dateline-RESOLVED
-    vertex fleet, as packed int64 level-order indices (zone, _idx) —
-    per-part exterior bbox stats are a JVM aggregation, the HEALPix y
-    of the lat extremes is one tiny Arrow pass over the per-part
-    rows, and band spans plus polar-cap ring runs are then column
-    math from those same rows (_part_candidate_idx, shared with
-    polyfill_many; each part's own longitude wedge, padded by 4x the
-    cell-to-nucleus longitude bound, drives its cap runs). The output
-    is a SUPERSET of the cells holding a point of each part, so it
-    prefilters both centroid membership (polyfill_many_df) and point
-    containment (polygon_join_df). May contain duplicates — callers
-    dedupe on the 8-byte key."""
-    from ..kernel.regions import healpix_forward_cfg
-
-    @pandas_udf(T.DoubleType())
-    def _fwd_y(lat_s: pd.Series) -> pd.Series:
-        _, y = healpix_forward_cfg(
-            cfg, np.zeros(len(lat_s)), lat_s.to_numpy(np.float64)
-        )
-        return pd.Series(y, index=lat_s.index)
-
-    heads = (
-        resolved.where(F.col("ring") == 0)
-        .groupBy("zone", "part")
-        .agg(
-            F.min("lon").alias("lon_lo"), F.max("lon").alias("lon_hi"),
-            F.min("lat").alias("lat_lo"), F.max("lat").alias("lat_hi"),
-        )
-        .select(
-            "zone", "lon_lo", "lon_hi",
-            _fwd_y(F.col("lat_lo")).alias("y_lo"),
-            _fwd_y(F.col("lat_hi")).alias("y_hi"),
-        )
+    """Candidate res-`res` cells per zone of a per-zone fleet table
+    (resolve_fleet_vertices / _zone_table), as packed int64
+    level-order indices (zone, _idx): the parts are inlined, and band
+    spans plus polar-cap ring runs are column math over their
+    longitude ranges and HEALPix y extremes (_part_candidate_idx; each
+    part's own longitude wedge, padded by 4x the cell-to-nucleus
+    longitude bound, drives its cap runs). No aggregation, no Python.
+    The output is a SUPERSET of the cells holding a point of each
+    part, so it prefilters both centroid membership (polyfill_many_df)
+    and point containment (polygon_join_df). May contain duplicates —
+    callers dedupe on the 8-byte key."""
+    return _part_candidate_idx(
+        zones.selectExpr("zone", "inline(parts)"), cfg, res
     )
-    return _part_candidate_idx(heads, cfg, res)
 
 
 def even_odd_refine(
-    pts: DataFrame, resolved: DataFrame, x_col: str, y_col: str
+    pts: DataFrame, zones: DataFrame, x_col: str, y_col: str
 ) -> DataFrame:
     """The (point x zone) candidate rows of `pts` whose point
-    (x_col, y_col) lies inside their zone, columns unchanged.
+    (x_col, y_col) lies inside their zone of the per-zone fleet table
+    `zones`, columns unchanged.
 
-    The ring table has one tiny row per zone (AQE broadcasts it): its
-    rings sorted by (part, ring), each a list of edges
-    (v[k], v[(k+1) % n]) in vtx order, closing edge included, minus
-    the y1 == y2 edges, which never cross the test ray. `pts`
-    equi-joins it on zone, and one SQL fold over the zone's rings
-    tests each edge with the kernel's crossing predicate
+    Each zone row derives its ring list once (the zone table is tiny;
+    AQE broadcasts it): its parts' rings in order, each a list of
+    edges (v[k], v[(k+1) % n]), closing edge included, minus the
+    y1 == y2 edges, which never cross the test ray. `pts` equi-joins
+    it on zone, and one SQL fold over the zone's rings tests each edge
+    with the kernel's crossing predicate
     ((y1 > y) != (y2 > y)) AND x < (x2-x1)*(y-y1)/(y2-y1)+x1
     (kernel/regions.py points_in_ring, same arithmetic; the division
     only runs for a crossing edge). An exterior (ring 0) opens its
     part with its parity, a hole can only clear the open part of its
     own id, and a zone holds the point once any part does: ext-odd
-    AND NOT hole-odd per part, OR over parts. A part without a ring 0
-    matches nothing."""
-    per_ring = resolved.groupBy("zone", "part", "ring").agg(
-        F.sort_array(F.collect_list(F.struct("vtx", "lon", "lat")))
-        .alias("v")
-    )
-    rings = per_ring.groupBy("zone").agg(
-        F.sort_array(F.collect_list(F.expr(
-            "named_struct('part', part, 'ring', ring, 'edges', filter("
-            "zip_with(v, concat(slice(v, 2, size(v)), slice(v, 1, 1)), "
-            "(p, q) -> named_struct("
-            "'x1', p.lon, 'y1', p.lat, 'x2', q.lon, 'y2', q.lat)), "
-            "e -> e.y1 != e.y2))"
-        ))).alias("_rings")
+    AND NOT hole-odd per part, OR over parts."""
+    rings = zones.selectExpr(
+        "zone",
+        "flatten(transform(parts, p -> transform(p.rings, (v, i) -> "
+        "named_struct('part', p.part, 'ring', i, 'edges', filter("
+        "zip_with(v, concat(slice(v, 2, size(v)), slice(v, 1, 1)), "
+        "(a, b) -> named_struct("
+        "'x1', a.lon, 'y1', a.lat, 'x2', b.lon, 'y2', b.lat)), "
+        "e -> e.y1 != e.y2))))) AS _rings",
     )
     x, y = f"`{x_col}`", f"`{y_col}`"
     odd = (
@@ -1359,74 +1296,81 @@ def polyfill_many_df(
     partitions: int | None = None,
     split_dateline: bool | None = None,
 ) -> DataFrame:
-    """DataFrame-NATIVE polygon-fleet polyfill: same semantics as
-    polyfill_many (centroid-in-polygon membership, rhp_wrappers.py:
-    510-599; band spans + closed-form polar-cap ring runs)
-    but the polygons arrive as a VERTEX TABLE
+    """DataFrame-NATIVE polygon-fleet polyfill: centroid-in-polygon
+    membership (rhp_wrappers.py:510-599; band spans + closed-form
+    polar-cap ring runs) with the polygons as a VERTEX TABLE
     (zone, part, ring, vtx, lon, lat) — ring 0 the exterior, rings
     >= 1 holes — so NOTHING about the fleet ever lives on the driver:
     no span loop, no vertex-list closure pickled into tasks. A
     10^6-polygon continental parcel fleet is just a bigger input
-    table; driver memory stays flat.
+    table; driver memory stays flat. polyfill_many is an adapter over
+    the same plan from the zone table on.
 
     Plan shape (all equi-joins and aggregations, no nested-loop):
-      1. dateline resolve: vertices collect_list into one array per
-         (zone, part) — a JVM partial-aggregation shuffle — and ONE
-         Arrow-batched pandas_udf applies the exact kernel
-         split_antimeridian per polygon (plain Python loops over the
-         batch, microseconds per small ring; split parts get ids
-         part*64 + i), exploding back to vertex rows. No per-group
-         pandas overhead: a 100k-polygon fleet resolves in one pass.
-      2. per-part exterior bbox stats are a plain JVM aggregation;
-         the HEALPix y of the lat extremes is one tiny Arrow pass
-         over the per-part rows; band row/column spans and cap ring
-         runs are then pure column math, sequence-exploded exactly
-         like polyfill_many (shared _part_candidate_idx helper).
-      3. membership replaces the driver-closure even-odd UDF with
-         even_odd_refine on the candidate centroids: an equi-join to
-         the per-zone ring table and one SQL fold over the zone's
-         rings (the kernel's exact crossing predicate per edge). It
-         stays JVM-side; the only Python is the geometry decode
-         kernels.
+      1. resolve_fleet_vertices builds the per-zone fleet table:
+         vertices collect_list into one array per (zone, part) — a
+         JVM partial-aggregation shuffle — ONE Arrow-batched
+         pandas_udf applies the exact kernel split_antimeridian per
+         polygon and emits each piece's bbox, HEALPix y extremes and
+         rings (split parts get ids part*64 + i), and one
+         groupBy(zone) collects them. No per-group pandas overhead: a
+         100k-polygon fleet resolves in one pass.
+      2. fleet_candidate_idx inlines the parts: band row/column spans
+         and cap ring runs are pure column math, sequence-exploded by
+         _part_candidate_idx; the distinct (zone, _idx) pairs are
+         persisted, since they feed both the cell decode and the
+         re-attach join.
+      3. membership is even_odd_refine on the candidate centroids: an
+         equi-join to the zone table's rings and one SQL fold over
+         them (the kernel's exact crossing predicate per edge). It
+         stays JVM-side; the only Python is the resolve and the
+         geometry decode kernels.
 
     split_dateline=None auto-splits crossing rings; True forces the
     split; False raises (inside the distributed resolve stage) if any
     ring crosses. Output: (tile_id, res, zone), distinct."""
-    from ..functions.udfs import rhp_centroid, rhp_index_to_suid
+    from pyspark import StorageLevel
 
     if partitions:
         polygons = polygons.repartition(partitions, "zone", "part")
-
-    # resolved feeds two consumers (candidate spans and the even-odd
-    # ring table); persist() — lazily — so the collect_list + Arrow
-    # dateline-split + explode runs once per action, not twice. The
-    # vertex table is the operator's own input size; MEMORY_AND_DISK
-    # spills rather than OOMs.
-    from pyspark import StorageLevel
-
-    resolved = resolve_fleet_vertices(
+    zones = resolve_fleet_vertices(
         polygons, cfg, split_dateline, "polyfill_many_df"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    keyed = fleet_candidate_idx(resolved, cfg, res)
+    )
+    # The pair table feeds BOTH branches of the core (distinct cells
+    # for the decode, pairs for the re-attach join); persist() it —
+    # lazily — so the resolve + candidate-generation lineage runs ONCE
+    # per action instead of twice (bench.py polyfill_fleet_df measured
+    # 13.3 and 16.6 s without it, 8.3 and 8.5 s with it). The cached
+    # table is (zone, int64) pairs, bounded by the operator's own
+    # output size, and MEMORY_AND_DISK spills rather than OOMs on huge
+    # fleets.
+    pairs = fleet_candidate_idx(zones, cfg, res).distinct().persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    return _polyfill_many_core(pairs, zones, res, cfg)
+
+
+def _polyfill_many_core(
+    pairs: DataFrame, zones: DataFrame, res: int, cfg: DggsConfig
+) -> DataFrame:
+    """polyfill_many_df from the distinct candidate pairs (zone, _idx)
+    and the zone table on: one centroid decode per distinct cell and
+    the even-odd refine."""
+    from ..functions.udfs import rhp_centroid, rhp_index_to_suid
 
     # Decode each DISTINCT cell once, not once per (zone, cell) pair:
     # overlapping fleets share cells, so the candidate pair table is
     # usually many times larger than the distinct-cell set (100k
-    # bench triangles: 1.5M pairs, 486 res-2 cells). The expensive
-    # Arrow GL centroid pass runs on the distinct cells only; pairs
-    # re-attach by the 8-byte _idx equi-join (AQE broadcasts the cell
-    # table when it is small). Round-robin fan-out keeps AQE from
-    # serializing the compute-heavy GL pass onto one task (hash keys
-    # would dedupe against the distinct's Exchange), same as
-    # polyfill_many.
-    # The pair table feeds BOTH branches (distinct cells for the
-    # decode, pairs for the re-attach join); persist() it — lazily —
-    # so the dateline-resolve + candidate-generation lineage runs
-    # ONCE per action instead of twice. The cached table is (zone,
-    # int64) pairs, bounded by the operator's own output size, and
-    # MEMORY_AND_DISK spills rather than OOMs on huge fleets.
-    pairs = keyed.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    fanout = keyed.sparkSession.sparkContext.defaultParallelism
+    # bench triangles: 1.5M pairs, 486 res-2 cells), and cap-reaching
+    # zones share the expensive polar dart/skew cells. The Arrow GL
+    # centroid pass (~1.75 ms/row) runs on the distinct cells only;
+    # pairs re-attach by the 8-byte _idx equi-join (AQE broadcasts the
+    # cell table when it is small). Explicit round-robin fan-out: the
+    # distinct() output is only a few MB, so AQE's BYTE-based
+    # coalescing would fold the compute-heavy GL pass into one task
+    # (the r4 bench's 6.4 s IQR; BENCH/fleet_mixed_attribution.json),
+    # and hash keys would dedupe against the distinct's Exchange.
+    fanout = pairs.sparkSession.sparkContext.defaultParallelism
     cells = (
         pairs.select("_idx").distinct()
         .repartition(fanout)
@@ -1441,7 +1385,7 @@ def polyfill_many_df(
 
     # `pairs` is distinct and each _idx decodes to one tile, so the
     # refined rows are distinct too
-    inside = even_odd_refine(cand, resolved, "cx", "cy")
+    inside = even_odd_refine(cand, zones, "cx", "cy")
     return inside.select(
         "tile_id",
         (F.length("tile_id") - 1).cast("int").alias("res"),

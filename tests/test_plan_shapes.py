@@ -740,14 +740,29 @@ class TestPolygonJoinDFPlan:
         assert plan.count("Range (0, 500,") == 1
         assert not re.search(r"Aggregate\(keys=\[[^\]]*\bpid#", plan)
         assert out.limit(1).count() >= 0
+        # nothing is cached: the candidates and the refine both read
+        # the zone table, and after an action the final adaptive plan
+        # runs the resolve's Arrow pass once, the refine's broadcast
+        # reading the zone aggregation's exchange again
+        assert "InMemoryTableScan" not in plan
+        assert out.collect() is not None
+        final = out._jdf.queryExecution().executedPlan().toString()
+        final = final.split("== Initial Plan ==")[0]
+        resolve = [
+            ln for ln in final.splitlines()
+            if "ArrowEvalPython" in ln and "_pieces" in ln
+        ]
+        assert len(resolve) == 1
+        assert re.search(r"ReusedExchange \[zone#", final)
 
 
 class TestFleetCandidatePlan:
     def test_one_forward_pass_no_join_no_cap_udf(self, spark):
         """fleet_candidate_idx emits band spans and polar-cap ring runs
-        from the same per-part rows: the per-part HEALPix-y pass runs
-        in ONE ArrowEvalPython, the cap path adds no Python stage, and
-        no join re-attaches per-zone bboxes."""
+        from the zone table's inlined part rows: the only
+        ArrowEvalPython is the resolve's (which also computes each
+        part's HEALPix y), the cap path adds no Python stage, and no
+        join re-attaches per-zone bboxes."""
         from rhealpixdggs_spark.kernel.constants import WGS84_003
         from rhealpixdggs_spark.operators.tiling import (
             fleet_candidate_idx,
@@ -767,9 +782,7 @@ class TestFleetCandidatePlan:
         arrow = [
             ln for ln in plan.splitlines() if "ArrowEvalPython" in ln
         ]
-        assert sum("_fwd_y" in ln for ln in arrow) == 1
-        # the other Arrow pass is the dateline resolve's _split
-        assert len(arrow) == 2
+        assert len(arrow) == 1
         assert "Join" not in plan
         assert "Union" not in plan
 

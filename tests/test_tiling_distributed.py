@@ -5,6 +5,9 @@ therefore reference dggs.py:1181-1331 / rhp_wrappers.py:510-599)
 outputs exactly, including cap rows, boundary prepend/append rows and
 polygon holes."""
 
+import contextlib
+import signal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -778,13 +781,15 @@ class TestZoneTilesManyDF:
 
 
 class TestAdapterLifecycle:
-    """The dict- and list-input operators persist nothing: an action
-    on polygon_join, polyfill_many or zone_tiles_many adds no RDD to
-    the session's storage (RDDs other tests left may be released
-    meanwhile, so only additions are checked).
-    zone_tiles_many runs with checkpoint=False here: with True its
-    per-level localCheckpoint blocks are the result's own lineage and
-    stay while the result is alive."""
+    """The polygon-fleet operators persist nothing that outlives the
+    action: an action on polygon_join, polygon_join_df, polyfill_many,
+    zone_tiles_many or zone_tiles_many_df adds no RDD to the session's
+    storage, and neither does a second call on the same fleet plan
+    (RDDs other tests left may be released meanwhile, so only
+    additions are checked). The zone rasterizers run with
+    checkpoint=False here: with True their per-level localCheckpoint
+    blocks are the result's own lineage and stay while the result is
+    alive."""
 
     ZONES = {
         "a": [([(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)],
@@ -798,9 +803,11 @@ class TestAdapterLifecycle:
         return {i.id() for i in infos}
 
     def test_adapters_leave_storage_at_baseline(self, spark):
-        from rhealpixdggs_spark.operators.joins import polygon_join
+        from rhealpixdggs_spark.operators.joins import (
+            polygon_join, polygon_join_df,
+        )
         from rhealpixdggs_spark.operators.tiling import (
-            polyfill_many, zone_tiles_many,
+            polyfill_many, zone_tiles_many, zone_tiles_many_df,
         )
 
         pts = spark.range(200).select(
@@ -809,17 +816,38 @@ class TestAdapterLifecycle:
             (F.floor(F.col("id") / 20) * 1.5).alias("lat"),
         )
         polys = [(z, e, h) for z, parts in self.ZONES.items() for e, h in parts]
+        # a distributed fleet: 20 squares of 3 degrees, 4 vertex rows each
+        fleet = spark.range(20).select(
+            F.concat(F.lit("s"), F.col("id")).alias("zone"),
+            F.lit(0).alias("part"), F.lit(0).alias("ring"),
+            F.posexplode(F.array(
+                F.struct(F.lit(0.0).alias("x"), F.lit(0.0).alias("y")),
+                F.struct(F.lit(3.0).alias("x"), F.lit(0.0).alias("y")),
+                F.struct(F.lit(3.0).alias("x"), F.lit(3.0).alias("y")),
+                F.struct(F.lit(0.0).alias("x"), F.lit(3.0).alias("y")),
+            )).alias("vtx", "v"),
+            (F.col("id") % 5 * 3.0).alias("x0"),
+            (F.floor(F.col("id") / 5) * 3.0).alias("y0"),
+        ).selectExpr(
+            "zone", "CAST(part AS INT) AS part", "CAST(ring AS INT) AS ring",
+            "vtx", "x0 + v.x AS lon", "y0 + v.y AS lat",
+        )
         runs = {
             "polygon_join": lambda: polygon_join(pts, polys, res=3),
+            "polygon_join_df": lambda: polygon_join_df(pts, fleet, res=3),
             "polyfill_many": lambda: polyfill_many(spark, self.ZONES, 3),
             "zone_tiles_many": lambda: zone_tiles_many(
                 spark, self.ZONES, 3, checkpoint=False
             ),
+            "zone_tiles_many_df": lambda: zone_tiles_many_df(
+                spark, fleet, 3, checkpoint=False
+            ),
         }
         for name, run in runs.items():
             before = self._stored(spark)
-            assert run().count() > 0, name
-            assert self._stored(spark) - before == set(), name
+            for call in range(2):
+                assert run().count() > 0, (name, call)
+                assert self._stored(spark) - before == set(), (name, call)
 
 
 class TestCapCandidates:
@@ -967,3 +995,140 @@ class TestCapCandidates:
             ).select("pid", "zone").collect()
         }
         assert got == exp and len(exp) > 1000
+
+
+@contextlib.contextmanager
+def _deadline(seconds, spark=None):
+    """Fail the body, and cancel the session's jobs, once it has run
+    `seconds`: a hang inside a Python worker would otherwise block the
+    test forever."""
+    def expire(signum, frame):
+        if spark is not None:
+            spark.sparkContext.cancelAllJobs()
+        raise TimeoutError(f"no result within {seconds} s")
+
+    old = signal.signal(signal.SIGALRM, expire)
+    signal.alarm(seconds)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+
+
+class TestBadPolygonVertices:
+    """A part with a non-finite vertex (NaN or +-inf longitude or
+    latitude, in the exterior or a hole) covers nothing and is
+    dropped, as a part without a ring 0 is; a finite longitude of any
+    size (1e300) still resolves. Either way the other zones' results,
+    and a mixed zone's good part, are unchanged, in each vertex-table
+    operator, under a deadline."""
+
+    @staticmethod
+    def _sq(x0, y0, x1, y1):
+        return [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+
+    def _zones(self):
+        nan, inf = float("nan"), float("inf")
+        good = {
+            "a": [(self._sq(0.0, 0.0, 10.0, 10.0),
+                   [self._sq(2.0, 2.0, 4.0, 4.0)])],
+            "d": [([(170.0, -10.0), (-170.0, -10.0), (-170.0, 10.0),
+                    (170.0, 10.0)], [])],
+            "mix": [(self._sq(20.0, 0.0, 25.0, 5.0), [])],
+        }
+        dropped = {
+            f"lon_{tag}": [([(30.0, 0.0), (x, 0.0), (35.0, 5.0),
+                             (30.0, 5.0)], [])]
+            for tag, x in (("nan", nan), ("inf", inf), ("ninf", -inf))
+        }
+        dropped["lat_nan"] = [
+            ([(30.0, 0.0), (35.0, nan), (35.0, 5.0), (30.0, 5.0)], [])
+        ]
+        dropped["hole_nan"] = [(
+            self._sq(40.0, 0.0, 45.0, 5.0),
+            [[(41.0, 1.0), (nan, 1.0), (42.0, 2.0)]],
+        )]
+        bad = {
+            **dropped,
+            "lon_huge": [([(30.0, 0.0), (1e300, 0.0), (35.0, 5.0),
+                           (30.0, 5.0)], [])],
+            "mix": good["mix"] + [(
+                [(21.0, 1.0), (inf, 1.0), (22.0, 2.0)], [],
+            )],
+        }
+        return good, {**good, **bad}, set(dropped)
+
+    def _check(self, spark, run):
+        from rhealpixdggs_spark.operators.tiling import polygons_to_df
+
+        good, mixed, dropped = self._zones()
+        with _deadline(300, spark):
+            exp = sorted(run(polygons_to_df(spark, good)))
+            got = run(polygons_to_df(spark, mixed))
+        assert exp
+        assert sorted(r for r in got if r[-1] in good) == exp
+        assert not {r[-1] for r in got} & dropped
+
+    def test_polygon_join_df(self, spark):
+        from rhealpixdggs_spark.operators.joins import polygon_join_df
+
+        pts = spark.range(60 * 31).select(
+            F.col("id").alias("pid"),
+            (F.col("id") % 60 - 5.0).alias("lon"),
+            (F.floor(F.col("id") / 60) - 15.0).alias("lat"),
+        ).union(spark.createDataFrame(
+            [(10_000, 175.0, 0.0), (10_001, -175.0, 1.0)],
+            "pid long, lon double, lat double",
+        ))
+        self._check(spark, lambda fleet: [
+            (r.pid, r.zone)
+            for r in polygon_join_df(pts, fleet, res=3).collect()
+        ])
+
+    def test_polyfill_many_df(self, spark):
+        from rhealpixdggs_spark.operators.tiling import polyfill_many_df
+
+        self._check(spark, lambda fleet: [
+            (r.tile_id, r.zone)
+            for r in polyfill_many_df(spark, fleet, 3).collect()
+        ])
+
+    def test_zone_tiles_many_df(self, spark):
+        from rhealpixdggs_spark.operators.tiling import zone_tiles_many_df
+
+        self._check(spark, lambda fleet: [
+            (r.tile_id, r.zone)
+            for r in zone_tiles_many_df(
+                spark, fleet, 3, checkpoint=False
+            ).collect()
+        ])
+
+    def test_kernel_helpers(self):
+        """The same rings through kernel ring_crosses_dateline and
+        split_antimeridian: a non-finite ring crosses nothing and its
+        polygon splits to nothing, 1e300 terminates, and the good
+        rings keep their results."""
+        import numpy as np
+
+        _good, mixed, _dropped = self._zones()
+        with _deadline(30):
+            assert not KR.ring_crosses_dateline(
+                [(0.0, 0.0), (float("inf"), 0.0), (1.0, 1.0)]
+            )
+            for zone, parts in mixed.items():
+                for ext, holes in parts:
+                    crosses = KR.ring_crosses_dateline(ext)
+                    split = KR.split_antimeridian([(ext, holes)])
+                    finite = all(
+                        np.isfinite(np.asarray(r, dtype=np.float64)).all()
+                        for r in (ext, *holes)
+                    )
+                    if not finite:
+                        assert split == [], zone
+                        if not np.isfinite([x for x, _ in ext]).all():
+                            assert crosses is False, zone
+                    elif zone == "d":
+                        assert crosses and len(split) == 2
+                    elif zone != "lon_huge":
+                        assert not crosses and split == [(ext, holes)], zone

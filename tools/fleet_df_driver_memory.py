@@ -1,12 +1,9 @@
 #!/usr/bin/env python
 """Driver-memory evidence for the DataFrame-native polygon fleet
-(round-4 VERDICT item 2): run polyfill_many (driver-side dict fleet)
-and polyfill_many_df (vertex-table fleet, spark.range-generated) at
-10k and 100k polygons and record the driver python process's VmRSS
-growth for each. The dict path builds an O(fleet) lookup closure on
-the driver and pickles it into every task; the DF path keeps the
-fleet distributed end-to-end, so its driver RSS must stay flat as the
-fleet grows 10x.
+(round-4 VERDICT item 2): run polyfill_many_df (vertex-table fleet,
+spark.range-generated) at 10k and 100k polygons and record the driver
+python process's VmRSS growth. The fleet stays distributed
+end-to-end, so driver RSS must stay flat as the fleet grows 10x.
 
 Writes BENCH/fleet_df_memory.json.
 """
@@ -31,19 +28,6 @@ def _rss_mb() -> float:
     return float("nan")
 
 
-def dict_fleet(n: int) -> dict:
-    # the driver-side representation polyfill_many consumes: O(n)
-    # Python vertex lists living in driver memory + the UDF closure
-    return {
-        f"z{i}": [([
-            (-160.0 + (i % 50) * 6.0, -20.0 + (i % 7)),
-            (-154.0 + (i % 50) * 6.0, -22.0 + (i % 7)),
-            (-157.0 + (i % 50) * 6.0, 10.0 + (i % 7)),
-        ], [])]
-        for i in range(n)
-    }
-
-
 def df_fleet(spark, n: int):
     from pyspark.sql import functions as F
 
@@ -64,25 +48,19 @@ def df_fleet(spark, n: int):
 
 
 def main() -> None:
-    from rhealpixdggs_spark.operators.tiling import (
-        polyfill_many,
-        polyfill_many_df,
-    )
+    from rhealpixdggs_spark.operators.tiling import polyfill_many_df
     from rhealpixdggs_spark.session import get_spark
 
     spark = get_spark(app_name="fleet-mem", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
 
     out = {"res": RES, "runs": {}}
-    # warm both code paths once so imports/JIT don't count as growth
+    # warm the code path once so imports/JIT don't count as growth
     polyfill_many_df(spark, df_fleet(spark, 1000), RES).write.format(
-        "noop").mode("overwrite").save()
-    polyfill_many(spark, dict_fleet(1000), RES).write.format(
         "noop").mode("overwrite").save()
 
     for variant, runner in [
         ("df", lambda n: polyfill_many_df(spark, df_fleet(spark, n), RES)),
-        ("dict", lambda n: polyfill_many(spark, dict_fleet(n), RES)),
     ]:
         for n in (10_000, 100_000):
             import gc
@@ -109,14 +87,10 @@ def main() -> None:
     out["summary"] = {
         "df_delta_10k_mb": d["df_10000"]["driver_rss_delta_mb"],
         "df_delta_100k_mb": d["df_100000"]["driver_rss_delta_mb"],
-        "dict_delta_10k_mb": d["dict_10000"]["driver_rss_delta_mb"],
-        "dict_delta_100k_mb": d["dict_100000"]["driver_rss_delta_mb"],
         "note": (
             "DF-native fleet: driver RSS delta must stay ~flat from "
             "10k to 100k polygons (the fleet is generated and "
-            "consumed executor-side). The dict fleet's delta grows "
-            "with the fleet: the polygon dict + pickled lookup "
-            "closure live on the driver."
+            "consumed executor-side)."
         ),
     }
     os.makedirs(os.path.join(os.path.dirname(__file__), "..", "BENCH"),
